@@ -110,6 +110,9 @@ def _feature_stages(text_col: str, n_features: int, bigrams: bool):
     return [tok, tf1, ng, tf2, asm], _TMP[4]
 
 
+FIT_PARTITIONS_CONF = "mysql_to_s3_spark.classifier.fitPartitions"
+
+
 def fit_partitions(
     df: DataFrame,
     floor: int = 4,
@@ -120,7 +123,8 @@ def fit_partitions(
     so dozens of near-empty partitions are pure scheduler overhead
     (r10: 50 iterations x 32 micro-partitions measured 29.8 s vs 13.5 s
     after narrowing). Conf ``mysql_to_s3_spark.classifier.fitPartitions``
-    pins the value; otherwise it is derived from the optimizer's size
+    pins the value (a positive integer; anything else raises
+    ``ValueError``); otherwise it is derived from the optimizer's size
     estimate of the (label, text) projection — one partition per
     ``bytes_per_partition``, floored at ``floor`` and capped at
     ``defaultParallelism`` (gradient jobs cannot use more slots than
@@ -133,8 +137,14 @@ def fit_partitions(
     import math
 
     spark = df.sparkSession
-    pinned = int(spark.conf.get("mysql_to_s3_spark.classifier.fitPartitions", "0"))
-    if pinned > 0:
+    raw = spark.conf.get(FIT_PARTITIONS_CONF, None)
+    if raw is not None:
+        try:
+            pinned = int(raw)
+        except ValueError:
+            raise ValueError(f"{FIT_PARTITIONS_CONF} must be an integer, got {raw!r}") from None
+        if pinned <= 0:
+            raise ValueError(f"{FIT_PARTITIONS_CONF} must be > 0, got {pinned}")
         return pinned
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.functions.cachepool import cache_scoped
-from mysql_to_s3_spark.operators.text import fingerprint, words
+from mysql_to_s3_spark.operators.text import fingerprint, let, tokens, words
 
 SHINGLE_K = 5  # character-shingle width
 MINHASH_N = 64  # signature length
@@ -47,9 +47,8 @@ MINHASH_BANDS = 16  # bands of r = N/BANDS rows each
 def shingles(col: Column, k: int = SHINGLE_K) -> Column:
     """Distinct character k-shingles of a document (order-free set).
 
-    r11: shingle bytes come from a LET-BOUND per-codepoint split array
-    (the single-element-array transform binding idiom) instead of
-    ``col.substr(i, k)`` — UTF8String substr seeks from the string
+    r11: shingle bytes come from a `let`-bound per-codepoint split array
+    instead of ``col.substr(i, k)`` — UTF8String substr seeks from the string
     START per call (codepoint indexing), so the old form cost O(len)
     per window and O(len^2) per doc on every shingle consumer
     (ngram/minhash pair scans, the pipeline near-dup stage).
@@ -63,9 +62,7 @@ def shingles(col: Column, k: int = SHINGLE_K) -> Column:
             lambda i: F.array_join(F.slice(cs, i, k), ""),
         )
 
-    return F.array_distinct(
-        F.element_at(F.transform(F.array(F.split(col, "")), sh), 1)
-    )
+    return F.array_distinct(let(F.split(col, ""), sh))
 
 
 def exact_dedup(
@@ -603,93 +600,6 @@ def winnow_pairs(
 SPAN_SEP = "\x1f"  # unit-separator joins span tokens; cannot occur in a token
 
 
-def token_frame(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The shared tokenization upstream of the span operators: one row
-    per doc with BOTH token streams they consume — ``rt`` (raw-case, the
-    rebuild stream of ``strip_duplicated_spans``) and ``lt`` (tokens of
-    the lowercased text, the key stream of ``duplicated_span_fraction``
-    and line derivations). Pool it with ``cache_scoped`` when one corpus
-    feeds several span consumers (the ``pairs=`` hook convention of
-    pipeline.split_leakage) — each operator's ``toks=`` parameter then
-    reuses this single scan+tokenize instead of re-deriving it. Both
-    arrays ride one exchange-free projection; semantics of every
-    consumer are exactly the no-pool path's."""
-    tok_re = F.lit(r"\w+|[^\w\s]")
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.regexp_extract_all(F.col(text_col), tok_re, 0).alias("rt"),
-        F.regexp_extract_all(F.lower(F.col(text_col)), tok_re, 0).alias("lt"),
-    )
-
-
-def _require_toks(toks: DataFrame, op: str) -> None:
-    missing = {"id", "rt", "lt"} - set(toks.columns)
-    if missing:
-        raise ValueError(
-            f"{op}: toks= must be a token_frame(...) output with columns "
-            f"(id, rt, lt); missing {sorted(missing)}"
-        )
-
-
-def span_windows(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """The REDUCED (id, start, key) k-token window-key frame shared by
-    the span-operator family (r11, the r10 verdict's item 3): one row
-    per k-token window with its 1-based token start position and the
-    md5-of-joined-LOWERCASED-window key — exactly the key both
-    ``duplicated_span_fraction`` and ``strip_duplicated_spans`` compile
-    (\\w token boundaries are case-insensitive, so tokenize(lower(text))
-    aligns position-for-position with lower() applied to the raw token
-    stream, and lower() distributes over the SPAN_SEP join). ONE
-    tokenize pass; the token array is bound as a column so the window
-    transform slices an attribute, never re-runs the regex. Docs with
-    fewer than k tokens contribute no rows.
-
-    Pool with ``cache_scoped`` when several span operators consume one
-    corpus and pass it via their ``wins=`` parameter — the r9 pooling
-    reversal (SCALE.md) showed caching the raw array<string> token
-    frame LOSES to recompute, but this frame is three fixed-width-ish
-    columns (bigint, int, 32-char key), the reduced projection that
-    the legs actually shuffle."""
-    lted = df.select(
-        F.col(id_col).alias("id"),
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0
-        ).alias("lt"),
-    )
-    n = F.size(F.col("lt")) - F.lit(k - 1)
-    return lted.select(
-        "id",
-        F.explode(
-            F.when(n >= 1, F.sequence(F.lit(1), F.greatest(n, F.lit(1)))).otherwise(
-                F.array().cast("array<int>")
-            )
-        ).alias("start"),
-        F.col("lt"),
-    ).select(
-        "id",
-        "start",
-        F.md5(F.array_join(F.slice(F.col("lt"), F.col("start"), k), SPAN_SEP)).alias(
-            "key"
-        ),
-    )
-
-
-def _require_wins(wins: DataFrame, op: str) -> None:
-    missing = {"id", "start", "key"} - set(wins.columns)
-    if missing:
-        raise ValueError(
-            f"{op}: wins= must be a span_windows(...) output with columns "
-            f"(id, start, key); missing {sorted(missing)}"
-        )
-
-
 def token_span_keys(col: Column, k: int = 5) -> Column:
     """array<string> of md5 keys, one per k-token window (stride 1) of the
     lowercased BPE-ish token stream of ``col``.
@@ -698,23 +608,22 @@ def token_span_keys(col: Column, k: int = 5) -> Column:
     it is (a) portable (identical in Spark and DuckDB, so the oracle can
     replicate the key exactly) and (b) a FIXED 32-byte shuffle key, vs a
     raw k-token span string that averages ~8k bytes of shuffle per window
-    at k=50. Docs shorter than k tokens yield an empty array.
-
-    PLAN TRAP (r11): the token array here is INLINE in the transform
-    lambda, so the tokenize regex re-runs once per window position
-    (O(len^2) per doc). Fine for tests/small frames; production paths
-    (duplicated_span_fraction) materialize the token array as a column
-    first and build the same keys from ``F.col(...)``.
+    at k=50. Docs shorter than k tokens yield an empty array. The token
+    array is `let`-bound, so each window slices it instead of re-running
+    the tokenize regex (O(len*k) per doc, not O(len^2)).
     """
-    t = F.regexp_extract_all(F.lower(col), F.lit(r"\w+|[^\w\s]"), 0)
-    n = F.size(t) - F.lit(k - 1)
-    return F.when(
-        n >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-            lambda i: F.md5(F.array_join(F.slice(t, i, k), SPAN_SEP)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+
+    def keys(t: Column) -> Column:
+        n = F.size(t) - F.lit(k - 1)
+        return F.when(
+            n >= 1,
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
+                lambda i: F.md5(F.array_join(F.slice(t, i, k), SPAN_SEP)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return let(tokens(F.lower(col)), keys)
 
 
 def duplicated_span_fraction(
@@ -723,8 +632,6 @@ def duplicated_span_fraction(
     text_col: str = "text",
     k: int = 5,
     min_docs: int = 2,
-    toks: DataFrame | None = None,
-    wins: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc cross-corpus span-duplication signal — the Spark form of the
     exact-substring dedup measure of Lee et al. 2022 ("Deduplicating
@@ -744,55 +651,11 @@ def duplicated_span_fraction(
          text itself);
       3. the per-doc roll-up is a count-sum re-agg on the doc id.
     No join carries document text; nothing is all-pairs.
-
-    ``toks=`` (r9): pass a pooled ``token_frame(...)`` to reuse one
-    scan+tokenize across the span-operator family; the span keys are
-    then derived from its ``lt`` stream — the same md5-of-joined-window
-    construction ``token_span_keys`` compiles, so output is identical.
-
-    ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
-    the tokenize+window+md5 derivation entirely — the span stream is
-    then exactly its (id, key) projection (identical keys by
-    construction), and one cached reduced frame feeds both this measure
-    and ``strip_duplicated_spans``. Takes precedence over ``toks=``.
     """
-    if toks is not None:
-        _require_toks(toks, "duplicated_span_fraction")
-        ids = toks.select("id")
-    else:
-        ids = df.select(F.col(id_col).alias("id"))
-    if wins is not None:
-        _require_wins(wins, "duplicated_span_fraction")
-        spans = wins.select("id", F.col("key").alias("s"))
-    else:
-        if toks is not None:
-            lted = toks.select("id", "lt")
-        else:
-            # materialize the lowercased token array as a COLUMN before
-            # the window transform (r11): token_span_keys' lambda slices
-            # the token array once per window position, and an INLINE
-            # regexp_extract_all subtree re-runs the whole tokenize regex
-            # at every lambda evaluation (HOF bodies re-evaluate their
-            # non-lambda subtrees per element — invisible to plan-text
-            # counting, it is ONE occurrence evaluated O(windows) times).
-            # A bound column turns that into an O(k) array slice per
-            # window: same md5 keys, same output, O(len^2) -> O(len*k)
-            # per doc.
-            lted = df.select(
-                F.col(id_col).alias("id"),
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0
-                ).alias("lt"),
-            )
-        n = F.size(F.col("lt")) - F.lit(k - 1)
-        keys = F.when(
-            n >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                lambda i: F.md5(F.array_join(F.slice(F.col("lt"), i, k), SPAN_SEP)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        spans = lted.select("id", F.explode(keys).alias("s"))
+    spans = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(token_span_keys(F.col(text_col), k)).alias("s"),
+    )
     per_span_doc = spans.groupBy("s", "id").agg(F.count(F.lit(1)).alias("w"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("s"))
     flagged = per_span_doc.withColumn("__nd__", nd)
@@ -802,6 +665,7 @@ def duplicated_span_fraction(
             "n_dup_spans"
         ),
     )
+    ids = df.select(F.col(id_col).alias("id"))
     return ids.join(rolled, "id", "left").select(
         F.col("id").alias(id_col),
         F.coalesce(F.col("n_spans"), F.lit(0)).cast("long").alias("n_spans"),
@@ -883,8 +747,6 @@ def strip_duplicated_spans(
     k: int = 5,
     min_docs: int = 2,
     out_col: str = "clean_text",
-    toks: DataFrame | None = None,
-    wins: DataFrame | None = None,
 ) -> DataFrame:
     """The REWRITE half of Lee et al. 2022 exact-substring dedup (the
     published deduplicate-text-datasets tool removes every duplicated
@@ -896,10 +758,11 @@ def strip_duplicated_spans(
     is the measure; this is the scalpel.
 
     Output: (id_col, out_col, n_tokens, n_removed) for every input doc.
-    Spans are keyed on the LOWERCASED token window (the measure's key);
-    reconstruction uses the original-case tokens, whitespace
-    canonicalized to single spaces (the same documented tradeoff
-    ``strip_boilerplate_lines`` makes with line joins). Within-doc
+    Windows slide over the RAW token stream (the positions the rebuild
+    removes) and are keyed on their LOWERCASED join; reconstruction
+    uses the original-case tokens, whitespace canonicalized to single
+    spaces (the same documented tradeoff ``strip_boilerplate_lines``
+    makes with line joins). Within-doc
     repetition with no second document never triggers removal here
     (that is ``repetition_stats``' domain); a keeper doc keeps ALL its
     occurrences of its spans.
@@ -914,57 +777,30 @@ def strip_duplicated_spans(
          re-assembly exchange (collect bounded by a single doc's token
          count — the snowflake child-collect bound) — but ONLY for docs
          with at least one covered position: unaffected docs never
-         explode their token stream (with ``wins=``+no ``toks=`` they
-         are never even re-tokenized for the rebuild — the position
-         stream semi-joins the RAW doc ids first, so the posexplode
-         tokenize touches the affected fraction only); every doc's
-         canonicalized text and token count come from ONE tokenize pass
-         (r11 — the r9 shape evaluated the token projection four
-         times), left-joined with the rebuilt texts.
+         explode their token stream; every doc's canonicalized text
+         and token count come from ONE tokenize pass (r11 — the r9
+         shape evaluated the token projection four times), left-joined
+         with the rebuilt texts.
     Nothing is all-pairs; duplicated-span text never shuffles at all.
-
-    ``toks=`` (r9): pass a pooled ``token_frame(...)`` to reuse one
-    scan+tokenize across the span-operator family (its ``rt`` stream is
-    exactly the frame built here).
-
-    ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
-    the window-key derivation — its md5-of-joined-LOWERCASED-window
-    keys are identical to the ones built here (lower() distributes
-    over the SPAN_SEP join; \\w token boundaries are case-insensitive,
-    so the streams align position-for-position), and one cached
-    reduced frame feeds both this rewrite and
-    ``duplicated_span_fraction``.
     """
-    if toks is not None:
-        _require_toks(toks, "strip_duplicated_spans")
-        rt_src = toks.select("id", "rt")
-    else:
-        rt_src = df.select(
-            F.col(id_col).alias("id"),
-            F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0).alias("rt"),
-        )
-    if wins is not None:
-        _require_wins(wins, "strip_duplicated_spans")
-    else:
-        # \w token boundaries are case-insensitive, so the lowercased
-        # key stream aligns position-for-position with the raw tokens
-        n_wins = F.size(F.col("rt")) - F.lit(k - 1)
-        wins = rt_src.select(
-            "id",
-            F.explode(
-                F.when(
-                    n_wins >= 1,
-                    F.sequence(F.lit(1), F.greatest(n_wins, F.lit(1))),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("start"),
-            F.col("rt"),
-        ).select(
-            "id",
-            "start",
-            F.md5(
-                F.lower(F.array_join(F.slice(F.col("rt"), F.col("start"), k), SPAN_SEP))
-            ).alias("key"),
-        )
+    rt_src = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("rt"))
+    n_wins = F.size(F.col("rt")) - F.lit(k - 1)
+    wins = rt_src.select(
+        "id",
+        F.explode(
+            F.when(
+                n_wins >= 1,
+                F.sequence(F.lit(1), F.greatest(n_wins, F.lit(1))),
+            ).otherwise(F.array().cast("array<int>"))
+        ).alias("start"),
+        F.col("rt"),
+    ).select(
+        "id",
+        "start",
+        F.md5(
+            F.lower(F.array_join(F.slice(F.col("rt"), F.col("start"), k), SPAN_SEP))
+        ).alias("key"),
+    )
     # per-key stats as WINDOW functions over ONE key exchange instead of
     # a groupBy + join back: the join form evaluates the whole `wins`
     # subtree (tokenize + window explode + md5) twice per action, and
@@ -989,19 +825,12 @@ def strip_duplicated_spans(
     # token stream it would otherwise re-derive per consumer
     covered = cache_scoped(covered, "dedup.span.covered")
     affected = covered.select("id").distinct()
-    # rebuild stream: tokenize AFFECTED docs only. With raw input the
-    # semi-join runs on (id, text) BEFORE the tokenize projection, so
-    # unaffected docs never pay the rebuild tokenize; with toks= the
-    # arrays are already materialized and the semi-join just prunes.
-    if toks is not None:
-        hit = rt_src.join(affected, "id", "left_semi")
-    else:
-        hit = df.select(F.col(id_col).alias("id"), F.col(text_col)).join(
-            affected, "id", "left_semi"
-        ).select(
-            "id",
-            F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0).alias("rt"),
-        )
+    # rebuild stream: tokenize AFFECTED docs only — the semi-join runs
+    # on (id, text) BEFORE the tokenize projection, so unaffected docs
+    # never pay the rebuild tokenize
+    hit = df.select(F.col(id_col).alias("id"), F.col(text_col)).join(
+        affected, "id", "left_semi"
+    ).select("id", tokens(F.col(text_col)).alias("rt"))
     stream = hit.select(
         "id", F.posexplode(F.col("rt")).alias("pos0", "tok")
     ).select("id", (F.col("pos0") + 1).alias("pos"), "tok")

@@ -15,6 +15,8 @@ which generate the SQL from the same constants).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -53,8 +55,32 @@ def words(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(WORD_RE), 0)
 
 
+def lines(col: Column) -> Column:
+    return F.split(col, "\n")
+
+
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
+
+
+def let(expr: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(expr)`` with ``expr`` evaluated ONCE per row: the
+    single-element-array transform ``element_at(transform(array(expr),
+    fn), 1)`` binds ``expr`` to ``fn``'s lambda variable.
+
+    This is the one way to share a token/line array between the
+    builders below. They reference their arrays many times (the
+    language argmax chain ~13x, the n-gram windows once per element),
+    and Catalyst never CSEs higher-order functions, so every inline
+    reference re-runs the regex. A ``withColumn``-bound array does not
+    help under a filter: predicate pushdown substitutes the column's
+    definition back into each reference of the filter condition, and
+    the regex runs once per reference again. ``let`` is a single
+    expression, so neither pushdown nor ``CollapseProject`` can
+    duplicate its argument. (A bound ``withColumn`` does survive in a
+    plain select, where a multi-referenced non-cheap alias stays a
+    project boundary.)"""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
 def _occurrence_fraction(ws: Column, vocab: tuple[str, ...]) -> Column:
@@ -65,14 +91,9 @@ def _occurrence_fraction(ws: Column, vocab: tuple[str, ...]) -> Column:
     return F.when(F.size(ws) > 0, hits.cast("double") / F.size(ws)).otherwise(F.lit(0.0))
 
 
-def _raw_stats(col: Column, ws: Column | None = None) -> dict[str, Column]:
-    """Unrounded per-document features (one projection, shuffle-free).
-    Pass ``ws`` as a MATERIALIZED `words` column when co-selecting with
-    other word-derived signals — each inline ``words(col)`` re-runs the
-    regex per consuming column (HOFs are codegen-fallback, so Catalyst
-    never CSEs across output columns)."""
-    if ws is None:
-        ws = words(col)
+def _raw_stats(col: Column, ws: Column) -> dict[str, Column]:
+    """Unrounded per-document features of ``col`` and its word array
+    ``ws`` (one projection, shuffle-free)."""
     n_chars = F.length(col)
     n_words = F.size(ws)
     word_chars = F.aggregate(ws, F.lit(0), lambda acc, w: acc + F.length(w))
@@ -89,10 +110,10 @@ def _raw_stats(col: Column, ws: Column | None = None) -> dict[str, Column]:
     }
 
 
-def text_stats(col: Column, ws: Column | None = None) -> dict[str, Column]:
-    """Per-document quality features (all O(1)-per-row, shuffle-free).
-    ``ws``: optional materialized `words` column (see `_raw_stats`)."""
-    s = _raw_stats(col, ws=ws)
+def text_stats(col: Column, ws: Column) -> dict[str, Column]:
+    """Per-document quality features (all O(1)-per-row, shuffle-free)
+    of ``col`` and its word array ``ws``."""
+    s = _raw_stats(col, ws)
     return {
         "n_chars": s["n_chars"].cast("bigint"),
         "n_tokens": token_count(col).cast("bigint"),
@@ -103,9 +124,7 @@ def text_stats(col: Column, ws: Column | None = None) -> dict[str, Column]:
     }
 
 
-def gopher_stats(
-    col: Column, ws: Column | None = None, lines: Column | None = None
-) -> dict[str, Column]:
+def gopher_stats(col: Column, ws: Column, lines: Column) -> dict[str, Column]:
     """The remaining Gopher document-quality signals (Rae et al. 2021
     table A1 — the published rule set; `repetition_stats` covers the
     duplication half, `_raw_stats` the length/word-shape half):
@@ -120,14 +139,8 @@ def gopher_stats(
     Shuffle-free Column algebra (regexp + line/word HOFs), RE2-safe
     patterns so the DuckDB oracle replicates them exactly. Empty docs
     yield 0 ratios (not null), matching the other stats. ``ws`` /
-    ``lines``: optional materialized word/line arrays (see
-    `_raw_stats` — binding them once pays off when co-selected with
-    the other signal families)."""
-    if ws is None:
-        ws = words(col)
+    ``lines``: the doc's `words` / `lines` arrays."""
     n_words = F.size(ws)
-    if lines is None:
-        lines = F.split(col, "\n")
     n_lines = F.size(lines)
     n_sym = (
         F.regexp_count(col, F.lit("#"))
@@ -157,7 +170,7 @@ def gopher_stats(
 C4_TERMINAL_RE = "[.!?][\"']?$"
 
 
-def c4_stats(col: Column, lines: Column | None = None) -> dict[str, Column]:
+def c4_stats(col: Column, lines: Column) -> dict[str, Column]:
     """The C4 document-quality signals (Raffel et al. 2020 §2.2, the
     published 'Colossal Clean Crawled Corpus' heuristics — the other
     canonical rule family next to Gopher's table A1):
@@ -175,17 +188,12 @@ def c4_stats(col: Column, lines: Column | None = None) -> dict[str, Column]:
       (C4 removes such LINES; the flag is the doc-level signal).
 
     Shuffle-free Column algebra over line/word HOFs; empty docs yield
-    0 fractions. `c4_line_clean` is the rewrite half. ``lines``:
-    optional materialized line array (see `_raw_stats`)."""
-    if lines is None:
-        lines = F.split(col, "\n")
+    0 fractions. `c4_line_clean` is the rewrite half. ``lines``: the
+    doc's `lines` array."""
     n_lines = F.size(lines)
-    line_words = lambda l: F.regexp_extract_all(l, F.lit(r"\w+"), 0)  # noqa: E731
-    has_js = lambda l: F.exists(  # noqa: E731
-        line_words(l), lambda w: F.lower(w) == "javascript"
-    )
+    has_js = lambda l: F.exists(words(l), lambda w: F.lower(w) == "javascript")  # noqa: E731
     n_term = F.size(F.filter(lines, lambda l: F.rtrim(l).rlike(C4_TERMINAL_RE)))
-    n_short = F.size(F.filter(lines, lambda l: F.size(line_words(l)) < 3))
+    n_short = F.size(F.filter(lines, lambda l: F.size(words(l)) < 3))
     frac = lambda num, den: F.when(den > 0, num.cast("double") / den).otherwise(  # noqa: E731
         F.lit(0.0)
     )
@@ -199,34 +207,26 @@ def c4_stats(col: Column, lines: Column | None = None) -> dict[str, Column]:
     }
 
 
-def c4_line_clean(col: Column, lines: Column | None = None) -> Column:
-    """C4's line-level clean (the REWRITE half of `c4_stats`): keep
-    only lines that end in terminal punctuation AND carry at least 3
-    words AND do not contain the word 'javascript'; rejoin with \\n.
-    A doc whose every line fails comes back as '' (the downstream
-    gates treat '' as missing — JX semantics — so such docs fall out
-    at the next quality cut rather than silently surviving empty).
-    Per-row Column algebra: zero shuffle, streaming-safe, identical in
-    batch and stream pipeline forms. ``lines``: optional materialized
-    line array (see `_raw_stats`)."""
-    if lines is None:
-        lines = F.split(col, "\n")
-    line_words = lambda l: F.regexp_extract_all(l, F.lit(r"\w+"), 0)  # noqa: E731
-    # bind each line's word array ONCE (the single-pass struct-transform
-    # let-binding idiom): the keep predicate reads it twice (word count
-    # + javascript probe), and an unbound line_words(l) would re-run the
-    # regex per read — 2x the regex cost of the whole clean
-    bound = F.transform(
-        lines, lambda l: F.struct(l.alias("l"), line_words(l).alias("w"))
-    )
-    kept = F.transform(
-        F.filter(
-            bound,
-            lambda s: F.rtrim(s.getField("l")).rlike(C4_TERMINAL_RE)
-            & (F.size(s.getField("w")) >= 3)
-            & ~F.exists(s.getField("w"), lambda w: F.lower(w) == "javascript"),
+def c4_line_clean(lines: Column) -> Column:
+    """C4's line-level clean (the REWRITE half of `c4_stats`) over a
+    doc's `lines` array: keep only lines that end in terminal
+    punctuation AND carry at least 3 words AND do not contain the word
+    'javascript'; rejoin with \\n. A doc whose every line fails comes
+    back as '' (the downstream gates treat '' as missing — JX
+    semantics — so such docs fall out at the next quality cut rather
+    than silently surviving empty). Per-row Column algebra: zero
+    shuffle, streaming-safe, identical in batch and stream pipeline
+    forms."""
+    # each line's word array is bound once per line (the keep predicate
+    # reads it twice: word count + javascript probe)
+    kept = F.filter(
+        lines,
+        lambda l: let(
+            words(l),
+            lambda w: F.rtrim(l).rlike(C4_TERMINAL_RE)
+            & (F.size(w) >= 3)
+            & ~F.exists(w, lambda x: F.lower(x) == "javascript"),
         ),
-        lambda s: s.getField("l"),
     )
     return F.array_join(kept, "\n")
 
@@ -261,15 +261,15 @@ def compression_ratio(col: Column, level: int = 6) -> Column:
     return _ratio(col)
 
 
-def quality_score(col: Column, ws: Column | None = None) -> Column:
-    """[0,1] doc-quality heuristic: in-band length, low punctuation noise,
-    presence of function words. Weights in QUALITY_WEIGHTS.
+def quality_score(col: Column, ws: Column) -> Column:
+    """[0,1] doc-quality heuristic over ``col`` and its word array
+    ``ws``: in-band length, low punctuation noise, presence of function
+    words. Weights in QUALITY_WEIGHTS.
 
     Computed from RAW ratios (rounding only the final score): pre-rounded
     6dp inputs make the weighted sum land exactly on .5 decimal
-    boundaries, where engines' rounding implementations disagree.
-    ``ws``: optional materialized `words` column (see `_raw_stats`)."""
-    s = _raw_stats(col, ws=ws)
+    boundaries, where engines' rounding implementations disagree."""
+    s = _raw_stats(col, ws)
     len_ok = F.when((s["n_words"] >= 5) & (s["n_words"] <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
     punct_ok = F.greatest(F.lit(0.0), F.lit(1.0) - s["punct_ratio"] * 4)
     stop_ok = F.least(F.lit(1.0), s["stopword_ratio"] * 5)
@@ -277,30 +277,29 @@ def quality_score(col: Column, ws: Column | None = None) -> Column:
     return F.round(w["len"] * len_ok + w["punct"] * punct_ok + w["stop"] * stop_ok, 6)
 
 
-def language_id(col: Column, dws: Column | None = None) -> Column:
-    """Stopword-profile language ID: argmax word-set overlap with each
-    language profile; 'und' when nothing matches. Tie-break = LANG_PROFILES
-    order.
+def language_id(ws: Column) -> Column:
+    """Stopword-profile language ID over a doc's word array ``ws``:
+    argmax word-set overlap with each language profile; 'und' when
+    nothing matches. Tie-break = LANG_PROFILES order. The
+    distinct-lowercased word set is `let`-bound: the argmax when-chain
+    reads it ~13x."""
 
-    ``dws``: optional MATERIALIZED distinct-lowercased word array
-    (``array_distinct(transform(words(col), lower))``). The argmax
-    when-chain references the per-language scores ~13x, and each
-    unbound reference re-derives the regex + distinct per row (HOFs are
-    codegen-fallback, so Catalyst never CSEs them — see `_raw_stats`)."""
-    ws = dws if dws is not None else F.array_distinct(F.transform(words(col), F.lower))
-    scores = {lang: F.size(F.array_intersect(ws, F.array(*[F.lit(w) for w in prof])))
-              for lang, prof in LANG_PROFILES.items()}
-    langs = list(LANG_PROFILES)
-    out = F.lit("und")
-    for lang in reversed(langs):
-        i = langs.index(lang)
-        cond = scores[lang] > 0
-        for other in langs[:i]:  # earlier (higher-priority) languages win ties
-            cond = cond & (scores[lang] > scores[other])
-        for other in langs[i + 1:]:
-            cond = cond & (scores[lang] >= scores[other])
-        out = F.when(cond, F.lit(lang)).otherwise(out)
-    return out
+    def argmax(dws: Column) -> Column:
+        scores = {lang: F.size(F.array_intersect(dws, F.array(*[F.lit(w) for w in prof])))
+                  for lang, prof in LANG_PROFILES.items()}
+        langs = list(LANG_PROFILES)
+        out = F.lit("und")
+        for lang in reversed(langs):
+            i = langs.index(lang)
+            cond = scores[lang] > 0
+            for other in langs[:i]:  # earlier (higher-priority) languages win ties
+                cond = cond & (scores[lang] > scores[other])
+            for other in langs[i + 1:]:
+                cond = cond & (scores[lang] >= scores[other])
+            out = F.when(cond, F.lit(lang)).otherwise(out)
+        return out
+
+    return let(F.array_distinct(F.transform(ws, F.lower)), argmax)
 
 
 def kgram_rolling_hashes(col: Column, k: int = 5, base: int = 257) -> Column:
@@ -312,13 +311,12 @@ def kgram_rolling_hashes(col: Column, k: int = 5, base: int = 257) -> Column:
     bigint exactly for k<=6 at base 257, so an engine-portable oracle can
     replicate them bit-for-bit (no engine-specific murmur/xxhash).
 
-    r11: character access goes through a LET-BOUND codepoint array (the
-    single-element-array transform binding trick, the
-    trimmed_stats_of_list idiom) instead of ``substring(col, i, 1)`` —
-    UTF8String substring seeks from the string START on every call
-    (codepoint indexing), so the old form cost O(len) per accessed
-    position and O(len^2·k) per doc (measured ~12 executor-CPU-s for
-    the winnow base leg at sf0.1; ~2 s after). ``split(col, '')``
+    r11: character access goes through a `let`-bound codepoint array
+    instead of ``substring(col, i, 1)`` — UTF8String substring seeks
+    from the string START on every call (codepoint indexing), so the
+    old form cost O(len) per accessed position and O(len^2·k) per doc
+    (measured ~12 executor-CPU-s for the winnow base leg at sf0.1; ~2 s
+    after). ``split(col, '')``
     yields exactly one element per codepoint and ``ascii`` returns its
     codepoint, so the hash values are bit-identical."""
     n = F.length(col)
@@ -335,9 +333,8 @@ def kgram_rolling_hashes(col: Column, k: int = 5, base: int = 257) -> Column:
 
         return F.transform(F.sequence(F.lit(1), npos), h)
 
-    cps_once = F.array(F.transform(F.split(col, ""), F.ascii))
     return F.when(
-        npos >= 1, F.element_at(F.transform(cps_once, windows), 1)
+        npos >= 1, let(F.transform(F.split(col, ""), F.ascii), windows)
     ).otherwise(F.array().cast("array<bigint>"))
 
 
@@ -347,17 +344,11 @@ def winnow_fingerprint(col: Column, k: int = 5, window: int = 4) -> Column:
     hashes. Guarantees any shared substring of length >= k+window-1
     contributes a shared fingerprint — the standard local-dedup sketch.
 
-    r11: the hash array is LET-BOUND (single-element-array transform)
-    before winnowing — winnow_from_hashes now reads its input ``window``
-    times per position (cheap on a bound array), which would re-expand a
-    raw k-gram expression ``window`` times per element here."""
-    return F.element_at(
-        F.transform(
-            F.array(kgram_rolling_hashes(col, k)),
-            lambda hs: winnow_from_hashes(hs, window),
-        ),
-        1,
-    )
+    r11: the hash array is `let`-bound before winnowing —
+    winnow_from_hashes reads its input ``window`` times per position
+    (cheap on a bound array), which would re-expand a raw k-gram
+    expression ``window`` times per element here."""
+    return let(kgram_rolling_hashes(col, k), lambda hs: winnow_from_hashes(hs, window))
 
 
 def winnow_from_hashes(hs: Column, window: int = 4) -> Column:
@@ -368,8 +359,8 @@ def winnow_from_hashes(hs: Column, window: int = 4) -> Column:
     projection collapse re-expands the whole O(n*k) hash computation at
     every reference (measured: catalog query went 25s -> timeout when a
     w-way least() referenced the expression w times). Pass `F.col(...)`
-    after a withColumn (or a lambda-bound variable, the
-    winnow_fingerprint idiom) when composing.
+    after a withColumn, or a `let`-bound variable (the
+    winnow_fingerprint idiom), when composing.
 
     r11: the per-window minimum is a w-way ``least`` of ``element_at``
     reads instead of ``array_min(slice(...))`` — slice ALLOCATES a
@@ -549,51 +540,38 @@ def canonical_url(col: Column) -> Column:
     return F.concat(authority, path, qcanon)
 
 
-def word_bigrams(col: Column, ws: Column | None = None) -> Column:
-    """Adjacent word bigrams as "w1 w2" strings (empty when < 2 words).
-
-    ``ws``: optional MATERIALIZED `words` column. The transform lambda
-    references the word array twice PER ELEMENT, so an inline
-    ``words(col)`` re-runs the regex O(len) times per row (the same
-    HOF no-CSE trap as repetition_stats' ``bg``); callers that already
-    bind the word array should pass it here.
-    """
-    if ws is None:
-        ws = words(col)
+def word_bigrams(ws: Column) -> Column:
+    """Adjacent bigrams of the word array ``ws`` as "w1 w2" strings
+    (empty when < 2 words). The lambda reads ``ws`` twice per element,
+    so pass a bound array (a column or a `let` variable)."""
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(ws) - 1, F.lit(0))),
         lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
     )
 
 
-def repetition_stats(
-    col: Column, bg: Column | None = None, ws: Column | None = None
-) -> dict[str, Column]:
+def repetition_stats(ws: Column) -> dict[str, Column]:
     """Gopher-style repetition signals (Rae et al. 2021, table A1 —
-    public quality-filter rules): ``dup_word_frac`` = 1 - distinct/total
-    words, ``top_bigram_frac`` = share of the most frequent word bigram.
+    public quality-filter rules) of the word array ``ws``:
+    ``dup_word_frac`` = 1 - distinct/total words, ``top_bigram_frac`` =
+    share of the most frequent word bigram.
 
     Shuffle-free Column algebra; top_bigram_frac is O(len^2) per doc
-    (distinct-bigrams x filter scan). CALLER BEWARE: pass ``bg`` as a
-    MATERIALIZED `word_bigrams` column whenever the input is more than a
-    handful of rows — the nested HOF references the bigram array once
-    per outer element, and with an inline expression Catalyst re-derives
-    the whole array each time, turning O(len^2) into O(len^3) (measured
-    12.3 s vs 0.9 s on 50k docs). Same plan trap, same fix as the
-    winnowing row. For multi-MB docs switch to the linear explode ->
-    groupBy(doc, bigram) -> max form and pay the shuffle instead.
-    ``ws``: optional materialized `words` column (see `_raw_stats`).
-    """
-    if ws is None:
-        ws = words(col)
+    (distinct-bigrams x filter scan). The bigram array is `let`-bound:
+    the nested HOF reads it once per outer element, and an inline
+    bigram expression would be re-derived each time, turning O(len^2)
+    into O(len^3) (measured 12.3 s vs 0.9 s on 50k docs). For multi-MB
+    docs switch to the linear explode -> groupBy(doc, bigram) -> max
+    form and pay the shuffle instead."""
     nw = F.size(ws)
     dup_word = F.when(
         nw > 0, F.lit(1.0) - F.size(F.array_distinct(ws)).cast("double") / nw
     ).otherwise(F.lit(0.0))
-    if bg is None:
-        bg = word_bigrams(col)
-    top = F.array_max(
-        F.transform(F.array_distinct(bg), lambda d: F.size(F.filter(bg, lambda x: x == d)))
+    top = let(
+        word_bigrams(ws),
+        lambda bg: F.array_max(
+            F.transform(F.array_distinct(bg), lambda d: F.size(F.filter(bg, lambda x: x == d)))
+        ),
     )
     top_bigram = F.when(nw > 1, top.cast("double") / (nw - 1)).otherwise(F.lit(0.0))
     return {
@@ -602,15 +580,11 @@ def repetition_stats(
     }
 
 
-def word_ngrams(col: Column, n: int, ws: Column | None = None) -> Column:
-    """Adjacent word ``n``-grams as single-space-joined strings (empty
-    when the doc has fewer than ``n`` words). Pass ``ws`` as a
-    MATERIALIZED `words` column on real corpora — the lambda references
-    the word array ``n`` times per output element, and an inline
-    regexp_extract_all there is re-derived per reference (the same
-    O(len^2)->O(len^3) plan trap as `repetition_stats`)."""
-    if ws is None:
-        ws = words(col)
+def word_ngrams(ws: Column, n: int) -> Column:
+    """Adjacent ``n``-grams of the word array ``ws`` as
+    single-space-joined strings (empty when the doc has fewer than
+    ``n`` words). The lambda reads ``ws`` ``n`` times per output
+    element, so pass a bound array (a column or a `let` variable)."""
     # empty index array (NOT sequence(1, 0), which is the DESCENDING
     # [1, 0] in Spark) when the doc is shorter than n words — element_at
     # past the end throws under ANSI semantics
@@ -702,7 +676,7 @@ GOPHER_REPETITION_THRESHOLDS: dict[str, float] = {
 }
 
 
-def gopher_repetition(col: Column, ws: Column | None = None) -> dict[str, Column]:
+def gopher_repetition(col: Column, ws: Column) -> dict[str, Column]:
     """The COMPLETE Gopher repetition rule set (Rae et al. 2021 table A1
     — `repetition_stats` carries the two legacy signals, this adds the
     remaining twelve):
@@ -724,25 +698,17 @@ def gopher_repetition(col: Column, ws: Column | None = None) -> dict[str, Column
     whitespace. Everything is per-row Column algebra (sorted-array
     folds, O(L log L) per doc, zero Python, zero shuffles) so it
     composes with the other heuristic gates in ONE scan at any corpus
-    size, batch or streaming. Pass ``ws`` as a materialized `words`
-    column on real corpora (see `word_ngrams`). Published drop
-    thresholds: `GOPHER_REPETITION_THRESHOLDS`."""
-    if ws is None:
-        ws = words(col)
+    size, batch or streaming. ``ws``: the doc's bound `words` array
+    (see `word_ngrams`). Published drop thresholds:
+    `GOPHER_REPETITION_THRESHOLDS`."""
     n_chars = F.length(col)
     cfrac = lambda num: F.when(  # noqa: E731
         n_chars > 0, F.least(num.cast("double") / n_chars, F.lit(1.0))
     ).otherwise(F.lit(0.0))
 
-    def _bind(expr: Column, fn) -> Column:
-        # single-element-array transform = let-binding (the
-        # trimmed_stats_of_list trick): the parts array is split +
-        # filtered ONCE per row instead of re-derived by each consumer
-        return F.element_at(F.transform(F.array(expr), fn), 1)
-
     out: dict[str, Column] = {}
     for name, parts_expr in (
-        ("line", F.filter(F.split(col, "\n"), lambda x: x != "")),
+        ("line", F.filter(lines(col), lambda x: x != "")),
         ("para", F.filter(F.split(col, "\n\n"), lambda x: x != "")),
     ):
         def dup_frac(parts: Column) -> Column:
@@ -751,14 +717,14 @@ def gopher_repetition(col: Column, ws: Column | None = None) -> dict[str, Column
                 np > 0, F.lit(1.0) - F.size(F.array_distinct(parts)).cast("double") / np
             ).otherwise(F.lit(0.0))
 
-        out[f"dup_{name}_frac"] = _bind(parts_expr, dup_frac)
-        out[f"dup_{name}_char_frac"] = _bind(
+        out[f"dup_{name}_frac"] = let(parts_expr, dup_frac)
+        out[f"dup_{name}_char_frac"] = let(
             parts_expr, lambda parts: cfrac(_dup_char_sum(parts, beyond_first=True))
         )
     for n in (2, 3, 4):
-        out[f"top_{n}gram_char_frac"] = cfrac(_mode_char_coverage(word_ngrams(col, n, ws=ws)))
+        out[f"top_{n}gram_char_frac"] = cfrac(_mode_char_coverage(word_ngrams(ws, n)))
     for n in (5, 6, 7, 8, 9, 10):
-        out[f"dup_{n}gram_char_frac"] = cfrac(_dup_char_sum(word_ngrams(col, n, ws=ws)))
+        out[f"dup_{n}gram_char_frac"] = cfrac(_dup_char_sum(word_ngrams(ws, n)))
     return out
 
 
@@ -816,14 +782,10 @@ def url_blocked(col: Column, hosts: tuple[str, ...]) -> Column:
     )
 
 
-def blockword_frac(
-    col: Column, vocab: tuple[str, ...], ws: Column | None = None
-) -> Column:
-    """Fraction of word OCCURRENCES that are in ``vocab`` (lowercased)
-    — the word-blocklist quality signal public crawl pipelines pair
-    with the URL blocklist (RefinedWeb's "curated resources" filter).
-    0.0 for wordless docs. Per-row fold, shuffle-free, streaming-safe.
-    ``ws``: optional materialized `words` column (see `_raw_stats`)."""
-    if ws is None:
-        ws = words(col)
+def blockword_frac(ws: Column, vocab: tuple[str, ...]) -> Column:
+    """Fraction of the word array ``ws``'s OCCURRENCES that are in
+    ``vocab`` (lowercased) — the word-blocklist quality signal public
+    crawl pipelines pair with the URL blocklist (RefinedWeb's "curated
+    resources" filter). 0.0 for wordless docs. Per-row fold,
+    shuffle-free, streaming-safe."""
     return _occurrence_fraction(ws, tuple(w.lower() for w in vocab))

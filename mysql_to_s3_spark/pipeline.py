@@ -76,7 +76,23 @@ from mysql_to_s3_spark.operators.dedup import (
     simhash_pairs,
 )
 from mysql_to_s3_spark.operators.sampling import hash_split, stratified_hash_sample
-from mysql_to_s3_spark.operators.text import redact_pii
+from mysql_to_s3_spark.operators.text import (
+    GOPHER_REPETITION_THRESHOLDS,
+    blockword_frac,
+    c4_line_clean,
+    c4_stats,
+    compression_ratio,
+    gopher_repetition,
+    gopher_stats,
+    language_id,
+    let,
+    lines,
+    quality_score,
+    redact_pii,
+    repetition_stats,
+    url_blocked,
+    words,
+)
 
 
 class PipelineError(ValueError):
@@ -379,156 +395,37 @@ def _near_dup_pairs(df: DataFrame, cfg: CorpusConfig) -> DataFrame:
     return pairs.select("a", "b")
 
 
-def _bind_tmp(out: DataFrame, name: str, col: Column) -> DataFrame:
-    """Bind a gate-internal temp column, refusing to shadow a real one:
-    ``withColumn`` silently REPLACES an existing column, so a corpus
-    that legitimately carries a column with a gate temp name would be
-    overwritten and then dropped from the gate's output. Raising names
-    the collision instead (r10 advice)."""
-    if name in out.columns:
-        raise PipelineError(
-            f"corpus already carries a column named {name!r}, which a "
-            "pipeline gate binds as an internal temp column; rename it "
-            "upstream of prepare_corpus"
-        )
-    return out.withColumn(name, col)
-
-
-def _apply_repetition_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream Gopher repetition gate — per-row Column
-    algebra (zero shuffles, streaming-safe). The bigram AND word arrays
-    are materialized as columns first: repetition_stats' documented plan
-    trap (an inline bigram expression re-derives the array per outer
-    HOF element — O(len^3)), and the unbound word array re-runs the
-    word regex per referencing signal (r10 plan count: 20x on the
-    text_stats row before binding)."""
-    from mysql_to_s3_spark.operators.text import (
-        gopher_repetition,
-        repetition_stats,
-        word_bigrams,
-        words,
-    )
-
-    txt = F.col(cfg.text_col)
-    # word array first, bigrams FROM it: word_bigrams' lambda reads the
-    # array twice per element, so an unbound form re-runs the word
-    # regex O(len) times per row (r10 advice)
-    tmp = _bind_tmp(out, "__ws__", words(txt))
-    tmp = _bind_tmp(tmp, "__bg__", word_bigrams(txt, ws=F.col("__ws__")))
-    stats = repetition_stats(txt, bg=F.col("__bg__"), ws=F.col("__ws__"))
-    cond = F.lit(True)
-    if cfg.max_dup_word_frac is not None:
-        cond = cond & (
-            stats["dup_word_frac"] <= F.lit(float(cfg.max_dup_word_frac))
-        )
-    if cfg.max_top_bigram_frac is not None:
-        cond = cond & (
-            stats["top_bigram_frac"] <= F.lit(float(cfg.max_top_bigram_frac))
-        )
-    dropped = ["__bg__", "__ws__"]
-    if cfg.gopher_repetition_max:
-        rep = gopher_repetition(txt, ws=F.col("__ws__"))
-        unknown = sorted(set(cfg.gopher_repetition_max) - set(rep))
-        if unknown:
-            raise PipelineError(
-                f"unknown gopher_repetition_max signal(s) {unknown}; "
-                f"known: {sorted(rep)}"
-            )
-        for name, limit in sorted(cfg.gopher_repetition_max.items()):
-            cond = cond & (rep[name] <= F.lit(float(limit)))
-    return tmp.filter(cond).drop(*dropped)
-
-
 def _apply_url_blocklist(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
     """Shared batch/stream URL-blocklist stage — one in-row suffix-chain
     overlap against the literal host list (per-row, streaming-safe).
     Docs without a host are kept ("address unknown" != "blocked")."""
-    from mysql_to_s3_spark.operators.text import url_blocked
-
     if cfg.url_col is None:
         raise PipelineError("url_blocklist requires url_col to be set")
     return out.filter(~url_blocked(F.col(cfg.url_col), tuple(cfg.url_blocklist)))
 
 
-def _apply_blockword_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream word-blocklist gate — per-row fold,
-    shuffle-free, streaming-safe. Null text scores 0.0 (kept): the
-    other heuristic gates map null text to passing 0 ratios, and this
-    gate should not drop a row on a different rule's behalf."""
-    from mysql_to_s3_spark.operators.text import blockword_frac, words
-
-    # bind the word array once (the occurrence fold references it 3x,
-    # and each unbound reference re-runs the word regex per row)
-    tmp = _bind_tmp(out, "__bws__", words(F.col(cfg.text_col)))
-    bf = F.coalesce(
-        blockword_frac(
-            F.col(cfg.text_col), tuple(cfg.block_words), ws=F.col("__bws__")
-        ),
-        F.lit(0.0),
-    )
-    return tmp.filter(bf <= F.lit(float(cfg.max_blockword_frac))).drop("__bws__")
-
-
-def _apply_quality_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream quality-score gate — per-row, shuffle-free,
-    streaming-safe. Binds the word array once (the score's length/
-    stopword terms reference it ~5x; unbound references re-run the
-    word regex per row)."""
-    from mysql_to_s3_spark.operators.text import quality_score, words
-
-    txt = F.col(cfg.text_col)
-    tmp = _bind_tmp(out, "__qws__", words(txt))
-    return tmp.filter(
-        quality_score(txt, ws=F.col("__qws__")) >= F.lit(float(cfg.min_quality))
-    ).drop("__qws__")
-
-
-def _apply_language_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream language-ID gate — per-row, shuffle-free,
-    streaming-safe. Binds the distinct-lowercased word array once: the
-    argmax when-chain references the per-language scores ~13x, and each
-    unbound reference re-derives the regex + distinct per row."""
-    from mysql_to_s3_spark.operators.text import language_id, words
-
-    txt = F.col(cfg.text_col)
-    tmp = _bind_tmp(
-        out, "__dws__", F.array_distinct(F.transform(words(txt), F.lower))
-    )
-    return tmp.filter(
-        language_id(txt, dws=F.col("__dws__")).isin(*cfg.languages)
-    ).drop("__dws__")
-
-
-def _c4_gate_on(cfg: CorpusConfig) -> bool:
-    return (
-        cfg.c4_min_sentences is not None
-        or cfg.c4_block_braces
-        or cfg.c4_block_lorem
-    )
+# Each word-reading gate below is ONE filter whose word (and line)
+# arrays are `let`-bound inside the predicate, so the word regex runs
+# once per gate (see text.let for why a bound temp column would not).
 
 
 def _apply_c4_clean(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
     """C4 line-level clean: rewrite the text column in place. Null text
     stays null (nothing to clean — downstream gates already treat null
     as missing)."""
-    from mysql_to_s3_spark.operators.text import c4_line_clean
-
     txt = F.col(cfg.text_col)
     return out.withColumn(
-        cfg.text_col, F.when(txt.isNotNull(), c4_line_clean(txt))
+        cfg.text_col, F.when(txt.isNotNull(), c4_line_clean(lines(txt)))
     )
 
 
 def _apply_c4_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream C4 doc-level gate (sentence floor, brace and
-    lorem-ipsum blocks) — per-row Column algebra, zero shuffles,
-    streaming-safe. Null text passes the block rules (contains -> null
-    -> coalesced to keep: a different rule's job) but FAILS a sentence
-    floor (no sentences to count — same stance as the LM gate's null
-    score)."""
-    from mysql_to_s3_spark.operators.text import c4_stats
-
-    s = c4_stats(F.col(cfg.text_col))
+    """C4 doc-level gate (sentence floor, brace and lorem-ipsum blocks).
+    Null text passes the block rules (contains -> null -> coalesced to
+    keep: a different rule's job) but FAILS a sentence floor (no
+    sentences to count — same stance as the LM gate's null score)."""
+    txt = F.col(cfg.text_col)
+    s = c4_stats(txt, lines(txt))
     cond = F.lit(True)
     if cfg.c4_min_sentences is not None:
         cond = cond & (
@@ -542,54 +439,114 @@ def _apply_c4_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
     return out.filter(cond)
 
 
-def _gopher_gate_on(cfg: CorpusConfig) -> bool:
-    return any(
-        v is not None
-        for v in (
-            cfg.max_symbol_word_ratio,
-            cfg.max_bullet_line_frac,
-            cfg.max_ellipsis_line_frac,
-            cfg.min_alpha_word_frac,
-            cfg.min_compression_ratio,
-            cfg.max_compression_ratio,
-        )
+def _apply_quality_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    txt = F.col(cfg.text_col)
+    return out.filter(
+        let(words(txt), lambda ws: quality_score(txt, ws) >= F.lit(float(cfg.min_quality)))
     )
 
 
-def _apply_gopher_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
-    """Shared batch/stream Gopher shape gate (symbol/bullet/ellipsis/
-    alpha rules) — per-row Column algebra, zero shuffles,
-    streaming-safe. The word/line arrays are bound once per row (the
-    rules reference them several times each, and unbound references
-    re-run the regex/split per row)."""
-    from mysql_to_s3_spark.operators.text import gopher_stats, words
-
+def _apply_language_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
     txt = F.col(cfg.text_col)
-    out = _bind_tmp(out, "__gws__", words(txt))
-    out = _bind_tmp(out, "__gln__", F.split(txt, "\n"))
-    g = gopher_stats(txt, ws=F.col("__gws__"), lines=F.col("__gln__"))
-    cond = F.lit(True)
-    if cfg.max_symbol_word_ratio is not None:
-        cond = cond & (g["symbol_word_ratio"] <= F.lit(float(cfg.max_symbol_word_ratio)))
-    if cfg.max_bullet_line_frac is not None:
-        cond = cond & (g["bullet_line_frac"] <= F.lit(float(cfg.max_bullet_line_frac)))
-    if cfg.max_ellipsis_line_frac is not None:
-        cond = cond & (g["ellipsis_line_frac"] <= F.lit(float(cfg.max_ellipsis_line_frac)))
-    if cfg.min_alpha_word_frac is not None:
-        cond = cond & (g["alpha_word_frac"] >= F.lit(float(cfg.min_alpha_word_frac)))
-    if cfg.min_compression_ratio is not None or cfg.max_compression_ratio is not None:
-        from mysql_to_s3_spark.operators.text import compression_ratio
+    return out.filter(let(words(txt), lambda ws: language_id(ws).isin(*cfg.languages)))
 
-        # null text -> ratio 0.0 (NOT null): the other shape rules in
+
+def _apply_blockword_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """Word-blocklist gate. Null text scores 0.0 (kept): the other
+    heuristic gates map null text to passing 0 ratios, and this gate
+    should not drop a row on a different rule's behalf."""
+    vocab = tuple(cfg.block_words)
+    bf = let(words(F.col(cfg.text_col)), lambda ws: blockword_frac(ws, vocab))
+    return out.filter(F.coalesce(bf, F.lit(0.0)) <= F.lit(float(cfg.max_blockword_frac)))
+
+
+def _apply_repetition_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """Gopher repetition gate: the legacy dup-word / top-bigram cuts
+    plus any `gopher_repetition_max` signal limits."""
+    limits = dict(cfg.gopher_repetition_max or {})
+    unknown = sorted(set(limits) - set(GOPHER_REPETITION_THRESHOLDS))
+    if unknown:
+        raise PipelineError(
+            f"unknown gopher_repetition_max signal(s) {unknown}; "
+            f"known: {sorted(GOPHER_REPETITION_THRESHOLDS)}"
+        )
+    txt = F.col(cfg.text_col)
+
+    def keep(ws: Column) -> Column:
+        stats = repetition_stats(ws)
+        cond = F.lit(True)
+        if cfg.max_dup_word_frac is not None:
+            cond = cond & (stats["dup_word_frac"] <= F.lit(float(cfg.max_dup_word_frac)))
+        if cfg.max_top_bigram_frac is not None:
+            cond = cond & (stats["top_bigram_frac"] <= F.lit(float(cfg.max_top_bigram_frac)))
+        rep = gopher_repetition(txt, ws) if limits else {}
+        for name, limit in sorted(limits.items()):
+            cond = cond & (rep[name] <= F.lit(float(limit)))
+        return cond
+
+    return out.filter(let(words(txt), keep))
+
+
+def _apply_gopher_gate(out: DataFrame, cfg: CorpusConfig) -> DataFrame:
+    """Gopher shape gate (symbol/bullet/ellipsis/alpha rules, plus the
+    compression-ratio band)."""
+    txt = F.col(cfg.text_col)
+
+    def keep(ws: Column, ls: Column) -> Column:
+        g = gopher_stats(txt, ws, ls)
+        cond = F.lit(True)
+        if cfg.max_symbol_word_ratio is not None:
+            cond = cond & (g["symbol_word_ratio"] <= F.lit(float(cfg.max_symbol_word_ratio)))
+        if cfg.max_bullet_line_frac is not None:
+            cond = cond & (g["bullet_line_frac"] <= F.lit(float(cfg.max_bullet_line_frac)))
+        if cfg.max_ellipsis_line_frac is not None:
+            cond = cond & (g["ellipsis_line_frac"] <= F.lit(float(cfg.max_ellipsis_line_frac)))
+        if cfg.min_alpha_word_frac is not None:
+            cond = cond & (g["alpha_word_frac"] >= F.lit(float(cfg.min_alpha_word_frac)))
+        return cond
+
+    cond = let(words(txt), lambda ws: let(lines(txt), lambda ls: keep(ws, ls)))
+    if cfg.min_compression_ratio is not None or cfg.max_compression_ratio is not None:
+        # outside the let: a pandas UDF cannot run inside a lambda.
+        # Null text -> ratio 0.0 (NOT null): the other shape rules in
         # this gate map null text to 0.0 ratios, and a null here would
         # null the whole conjunction and silently drop the row on a
         # DIFFERENT rule's behalf
-        cr = F.coalesce(compression_ratio(F.col(cfg.text_col)), F.lit(0.0))
+        cr = F.coalesce(compression_ratio(txt), F.lit(0.0))
         if cfg.min_compression_ratio is not None:
             cond = cond & (cr >= F.lit(float(cfg.min_compression_ratio)))
         if cfg.max_compression_ratio is not None:
             cond = cond & (cr <= F.lit(float(cfg.max_compression_ratio)))
-    return out.filter(cond).drop("__gws__", "__gln__")
+    return out.filter(cond)
+
+
+def _row_gates(out: DataFrame, cfg: CorpusConfig):
+    """Yield ``(stage_name, frame)`` after each enabled per-row text
+    gate, in pipeline order — shared by the batch and streaming
+    compositions (per-row Column algebra: zero shuffles,
+    streaming-safe). The C4 clean rewrites BEFORE the scoring gates, so
+    quality/LM/dedup all see the cleaned text (the published C4
+    order)."""
+    gates = (
+        ("c4_clean", cfg.c4_line_clean, _apply_c4_clean),
+        ("c4_shape", cfg.c4_min_sentences is not None or cfg.c4_block_braces
+         or cfg.c4_block_lorem, _apply_c4_gate),
+        ("quality", cfg.min_quality is not None, _apply_quality_gate),
+        ("language", cfg.languages is not None, _apply_language_gate),
+        ("blockwords", cfg.block_words is not None, _apply_blockword_gate),
+        ("repetition", cfg.max_dup_word_frac is not None
+         or cfg.max_top_bigram_frac is not None or bool(cfg.gopher_repetition_max),
+         _apply_repetition_gate),
+        ("gopher_shape", any(v is not None for v in (
+            cfg.max_symbol_word_ratio, cfg.max_bullet_line_frac,
+            cfg.max_ellipsis_line_frac, cfg.min_alpha_word_frac,
+            cfg.min_compression_ratio, cfg.max_compression_ratio,
+        )), _apply_gopher_gate),
+    )
+    for name, enabled, gate in gates:
+        if enabled:
+            out = gate(out, cfg)
+            yield name, out
 
 
 def _apply_classifier_gate(out: DataFrame, cfg: CorpusConfig, classifier) -> DataFrame:
@@ -702,34 +659,8 @@ def prepare_corpus(
         )
         stages.append(("boilerplate", out))
 
-    if cfg.c4_line_clean:
-        # rewrite BEFORE the scoring gates, so quality/LM/dedup all see
-        # the cleaned text (the published C4 order)
-        out = _apply_c4_clean(out, cfg)
-        stages.append(("c4_clean", out))
-    if _c4_gate_on(cfg):
-        out = _apply_c4_gate(out, cfg)
-        stages.append(("c4_shape", out))
-
-    if cfg.min_quality is not None:
-        out = _apply_quality_gate(out, cfg)
-        stages.append(("quality", out))
-    if cfg.languages is not None:
-        out = _apply_language_gate(out, cfg)
-        stages.append(("language", out))
-
-    if cfg.block_words is not None:
-        out = _apply_blockword_gate(out, cfg)
-        stages.append(("blockwords", out))
-
-    if (cfg.max_dup_word_frac is not None or cfg.max_top_bigram_frac is not None
-            or cfg.gopher_repetition_max):
-        out = _apply_repetition_gate(out, cfg)
-        stages.append(("repetition", out))
-
-    if _gopher_gate_on(cfg):
-        out = _apply_gopher_gate(out, cfg)
-        stages.append(("gopher_shape", out))
+    for name, out in _row_gates(out, cfg):
+        stages.append((name, out))
 
     if cfg.classifier_accept is not None:
         # after the heuristic gates (cheapest first), before the LM gate
@@ -1065,22 +996,8 @@ def prepare_corpus_stream(
         from mysql_to_s3_spark.streaming.stream_extract import stream_url_dedup
 
         out = stream_url_dedup(out, ts_col, cfg.url_col, lateness)
-    if cfg.c4_line_clean:
-        # per-row rewrite, stateless — same stage order as batch
-        out = _apply_c4_clean(out, cfg)
-    if _c4_gate_on(cfg):
-        out = _apply_c4_gate(out, cfg)
-    if cfg.min_quality is not None:
-        out = _apply_quality_gate(out, cfg)
-    if cfg.languages is not None:
-        out = _apply_language_gate(out, cfg)
-    if cfg.block_words is not None:
-        out = _apply_blockword_gate(out, cfg)
-    if (cfg.max_dup_word_frac is not None or cfg.max_top_bigram_frac is not None
-            or cfg.gopher_repetition_max):
-        out = _apply_repetition_gate(out, cfg)
-    if _gopher_gate_on(cfg):
-        out = _apply_gopher_gate(out, cfg)
+    for _, out in _row_gates(out, cfg):
+        pass  # the stream keeps only the last gate's frame
     if cfg.classifier_accept is not None:
         # row-wise JVM transform: stateless, commutes with micro-batching;
         # the model must be pretrained — a stream cannot self-fit

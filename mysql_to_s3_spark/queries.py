@@ -1522,14 +1522,18 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from mysql_to_s3_spark.operators.text import (
+        blockword_frac,
+        c4_line_clean,
+        c4_stats,
         fingerprint,
+        gopher_repetition,
+        gopher_stats,
+        lines,
         repetition_stats,
         text_stats,
-        word_bigrams,
+        words,
     )
     from mysql_to_s3_spark.sources.registry import load_table, spread
-
-    from mysql_to_s3_spark.operators.text import gopher_stats
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     # r10: bind words(text) ONCE for the whole row — HOF expressions are
@@ -1538,18 +1542,10 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 20x per row (plan-counted, plans/r10/text_stats_before.txt); a
     # multi-referenced non-cheap alias survives CollapseProject as a
     # real project boundary, so every consumer reads the same array
-    from mysql_to_s3_spark.operators.text import words as _words
-
-    docs = docs.withColumn("__wt__", _words(F.col("text")))
-    # materialize the bigram array once (the nested top-bigram HOF
-    # references it per outer element — the O(len^3) trap, see
-    # repetition_stats docstring), built FROM the bound word array:
-    # word_bigrams' own lambda reads the array twice per element, so an
-    # unbound form re-ran words(text) O(len) times per row (r10 advice)
-    docs = docs.withColumn("__bg__", word_bigrams(F.col("text"), ws=F.col("__wt__")))
-    st = text_stats(F.col("text"), ws=F.col("__wt__"))
+    docs = docs.withColumn("__wt__", words(F.col("text")))
+    st = text_stats(F.col("text"), F.col("__wt__"))
     # + Gopher-style repetition legs (dup_word_frac, top_bigram_frac)
-    rep = repetition_stats(F.col("text"), bg=F.col("__bg__"), ws=F.col("__wt__"))
+    rep = repetition_stats(F.col("__wt__"))
     # r9 session 2: the remaining Gopher table-A1 shape rules
     # (text.gopher_stats) over a SYNTHESIZED multi-line doc — the
     # corpus text is single-line and symbol-free, so bullets, ellipsis
@@ -1569,20 +1565,16 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbound form re-ran words(concat_ws..) 8x and split(concat_ws..)
     # 6x per row — plan-counted); gopher_stats reads the bound arrays
     docs = docs.withColumn("__synth__", synth)
-    docs = docs.withColumn("__wsyn__", _words(F.col("__synth__"))).withColumn(
-        "__lsyn__", F.split(F.col("__synth__"), "\n")
+    docs = docs.withColumn("__wsyn__", words(F.col("__synth__"))).withColumn(
+        "__lsyn__", lines(F.col("__synth__"))
     )
-    gop = gopher_stats(
-        F.col("__synth__"), ws=F.col("__wsyn__"), lines=F.col("__lsyn__")
-    )
+    gop = gopher_stats(F.col("__synth__"), F.col("__wsyn__"), F.col("__lsyn__"))
     # r9s3: the COMPLETE Gopher repetition family (text.gopher_repetition)
     # over synth2 — repetition injected by doc_id arithmetic (dup lines
     # when d%2=0, a 1-3x repeated 10-word segment per d%3, a duplicated
     # paragraph when d%5=0); the oracle SQL constructs the identical
     # string, so the hash binds line/paragraph splitting, the n-gram
     # windows, the mode tie-break, and the overlap cap
-    from mysql_to_s3_spark.operators.text import gopher_repetition, words
-
     seg = F.array_join(F.slice(F.col("__wt__"), 1, 10), " ")
     docs = docs.withColumn("__seg__", seg)
     sg = F.col("__seg__")
@@ -1605,9 +1597,7 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).withColumn("__ws2__", words(F.col("__synth2__")))
-    rep2 = gopher_repetition(F.col("__synth2__"), ws=F.col("__ws2__"))
-    from mysql_to_s3_spark.operators.text import blockword_frac
-
+    rep2 = gopher_repetition(F.col("__synth2__"), F.col("__ws2__"))
     # r10: the C4 rule family (text.c4_stats + c4_line_clean) over
     # synth3 = synth + two deterministic closing lines that make every
     # rule fire somewhere: a javascript-word line on d%7 (terminal,
@@ -1615,8 +1605,6 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lorem-ipsum / plain terminal line by d%5 / d%11. The flags pack
     # as a bitmask; c4_clean_md5 binds the full line-clean REWRITE
     # (keep = terminal-punct AND >=3 words AND no 'javascript' word).
-    from mysql_to_s3_spark.operators.text import c4_line_clean, c4_stats
-
     jsline = F.when(d % 7 == 0, F.lit("the javascript menu loads fine.")).otherwise(
         F.lit("the simple menu loads fine.")
     )
@@ -1630,8 +1618,8 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bind the synth3 line array once for c4_stats + c4_line_clean
     # (the unbound form split __synth3__ 8x per row — plan-counted)
-    docs = docs.withColumn("__l3__", F.split(F.col("__synth3__"), "\n"))
-    c4 = c4_stats(F.col("__synth3__"), lines=F.col("__l3__"))
+    docs = docs.withColumn("__l3__", lines(F.col("__synth3__")))
+    c4 = c4_stats(F.col("__synth3__"), F.col("__l3__"))
     c4_flags = (
         c4["c4_has_brace"].cast("bigint")
         + c4["c4_has_lorem"].cast("bigint") * 2
@@ -1643,17 +1631,13 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[c.alias(n) for n, c in st.items()],
         *[c.alias(n) for n, c in rep.items()],
         *[F.round(c, 6).alias(n) for n, c in gop.items()],
-        F.round(
-            blockword_frac(F.col("text"), _BLOCK_WORDS, ws=F.col("__wt__")), 6
-        ).alias("blockword_frac"),
+        F.round(blockword_frac(F.col("__wt__"), _BLOCK_WORDS), 6).alias("blockword_frac"),
         *[F.round(c, 6).alias(n) for n, c in rep2.items()],
         F.round(c4["c4_term_line_frac"], 6).alias("c4_term_line_frac"),
         F.round(c4["c4_short_line_frac"], 6).alias("c4_short_line_frac"),
         c4["c4_sentences"].alias("c4_sentences"),
         c4_flags.alias("c4_flags"),
-        F.md5(c4_line_clean(F.col("__synth3__"), lines=F.col("__l3__"))).alias(
-            "c4_clean_md5"
-        ),
+        F.md5(c4_line_clean(F.col("__l3__"))).alias("c4_clean_md5"),
         fingerprint(F.col("text")).alias("fp"),
     )
 
@@ -2408,7 +2392,7 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mysql_to_s3_spark.operators.lm import bigram_logprob, unigram_logprob
     from mysql_to_s3_spark.operators.sampling import hash_split
-    from mysql_to_s3_spark.operators.text import language_id, quality_score
+    from mysql_to_s3_spark.operators.text import language_id, quality_score, words
     from mysql_to_s3_spark.sources.registry import load_table, spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -2502,24 +2486,14 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=25,
         weight_col="w6",
     ).select("doc_id", F.lit(True).alias("dsir_top25"))
-    # r10: bind the word array and its distinct-lowercased form once —
-    # quality_score references the words ~5x and language_id's argmax
-    # when-chain references the distinct array ~13x per row; unbound,
-    # each reference re-runs the regex/distinct (HOFs are
-    # codegen-fallback, no cross-reference CSE)
-    from mysql_to_s3_spark.operators.text import words as _words
-
-    base = (
-        docs.withColumn("__qws__", _words(F.col("text")))
-        .withColumn(
-            "__dws__", F.array_distinct(F.transform(F.col("__qws__"), F.lower))
-        )
-        .select(
-            F.col("doc_id"),
-            quality_score(F.col("text"), ws=F.col("__qws__")).alias("quality"),
-            language_id(F.col("text"), dws=F.col("__dws__")).alias("lang_guess"),
-            hash_split(F.col("doc_id"), _SPLIT_FRACTIONS).alias("split"),
-        )
+    # r10: bind the word array once — quality_score references it ~5x
+    # and language_id once more; unbound, each reference re-runs the
+    # regex (HOFs are codegen-fallback, no cross-reference CSE)
+    base = docs.withColumn("__qws__", words(F.col("text"))).select(
+        F.col("doc_id"),
+        quality_score(F.col("text"), F.col("__qws__")).alias("quality"),
+        language_id(F.col("__qws__")).alias("lang_guess"),
+        hash_split(F.col("doc_id"), _SPLIT_FRACTIONS).alias("split"),
     )
     # ppl_bucket (r8): CCNet's head/middle/tail split over the unigram-LM
     # scores — exact interpolated terciles of the ROUNDED score, so the
@@ -2638,7 +2612,11 @@ _q("text_quality", _text_quality_spark, _text_quality_row_sql())
 def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from mysql_to_s3_spark.operators.text import kgram_rolling_hashes, winnow_from_hashes
+    from mysql_to_s3_spark.operators.text import (
+        kgram_rolling_hashes,
+        tokens,
+        winnow_from_hashes,
+    )
     from mysql_to_s3_spark.sources.registry import load_table, spread
 
     from mysql_to_s3_spark.operators.dedup import (
@@ -2663,23 +2641,9 @@ def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__fps__"), F.lit(0).cast("bigint"), lambda a, x: a + x
         ).alias("fp_sum"),
     )
-    # r11 (verdict item 3): the REDUCED (id, start, key) window frame is
-    # pooled ONCE and feeds BOTH token-level legs (spanf + sp) — one
-    # tokenize+window+md5 pass instead of two, and ~20 bytes + one
-    # 32-char key per window in the cache. This is NOT the r9 reversal's
-    # loser: that A/B cached the raw array<string> token frame (columnar
-    # (de)serialization of two token arrays exceeded the regex
-    # recompute, SCALE.md "Winnow row pooling reversal"); span_windows
-    # is the reduced projection the legs actually shuffle. The bench
-    # releases the pool before every timed action, so each action pays
-    # the build exactly once.
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped as _cs
-    from mysql_to_s3_spark.operators.dedup import span_windows
-
-    wins = _cs(span_windows(docs, k=5), "winnow.wins")
     # leg: cross-doc duplicated-span fraction (Lee et al. exact-substring
-    # signal, k=5 token windows, md5 span keys)
-    spanf = duplicated_span_fraction(docs, k=5, min_docs=2, wins=wins)
+    # signal, k=5 token windows of the lowercased text, md5 span keys)
+    spanf = duplicated_span_fraction(docs, k=5, min_docs=2)
     # leg: line-level boilerplate removal over a DERIVED multi-line view
     # (docs are single-line token streams, so "lines" = aligned 10-token
     # chunks — deterministic in both engines; planted near-dup docs share
@@ -2696,10 +2660,9 @@ def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "\n",
     )
-    bl_src = docs.withColumn(
-        "__blt__",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\w+|[^\w\s]"), 0),
-    ).select("doc_id", text2.alias("text"))
+    bl_src = docs.withColumn("__blt__", tokens(F.lower(F.col("text")))).select(
+        "doc_id", text2.alias("text")
+    )
     bl = strip_boilerplate_lines(bl_src, max_docs=1).select(
         "doc_id",
         F.md5("clean_text").alias("bl_md5"),
@@ -2712,7 +2675,7 @@ def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union, and the original-case reconstruction to the oracle
     from mysql_to_s3_spark.operators.dedup import strip_duplicated_spans
 
-    sp = strip_duplicated_spans(docs, k=5, wins=wins).select(
+    sp = strip_duplicated_spans(docs, k=5).select(
         "doc_id",
         F.md5("clean_text").alias("sp_md5"),
         F.col("n_removed").alias("sp_removed"),
@@ -3166,12 +3129,14 @@ def _fit_drained(spark: SparkSession, sf_dir: str, kind: str, fit):
 
 # _FIT_CACHE kinds that memoise a HEADLINE operator's own composition or
 # result (not a model/index fit, fixture write, or streaming-drain
-# receipt). release_plan_memos drops these so a repeat bench iteration
-# re-runs the operator's own compute; everything else in _FIT_CACHE is a
-# one-time fit the bench deliberately prices once per session (LBFGS
-# classifier, IVF/PQ codebooks, BPE merges, bloom build, the ext/shard
-# lifecycles, and every availableNow drain receipt).
-_PLAN_MEMO_KINDS = frozenset({"prep_plan"})
+# receipt): ``prep_plan`` is the prepare_corpus composition and
+# ``p90b`` the exact grouped percentile's result rows.
+# release_plan_memos drops these so a repeat bench iteration re-runs the
+# operator's own compute; everything else in _FIT_CACHE is a one-time
+# fit the bench deliberately prices once per session (LBFGS classifier,
+# IVF/PQ codebooks, BPE merges, the ``bloomf`` bloom-build fit, the
+# ext/shard lifecycles, and every availableNow drain receipt).
+_PLAN_MEMO_KINDS = frozenset({"prep_plan", "p90b"})
 
 
 def release_plan_memos(spark: SparkSession) -> None:

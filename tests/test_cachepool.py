@@ -68,7 +68,7 @@ def test_external_clearcache_rehydrates_pool_hit(spark):
 
 def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
     """The r11 bench-honesty hook: release_plan_memos must drop every
-    pooled frame AND the plan-memo _FIT_CACHE kinds (prep_plan), while
+    pooled frame AND the plan-memo _FIT_CACHE kinds (prep_plan, p90b), while
     leaving genuine model/index fits and drain receipts warm."""
     from mysql_to_s3_spark import queries as cat
     from mysql_to_s3_spark.functions import cachepool
@@ -79,6 +79,7 @@ def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
     assert c.is_cached
     skey = cachepool._session_key(spark)
     cat._FIT_CACHE[("prep_plan", skey, "/fake/sf")] = "memoised composition"
+    cat._FIT_CACHE[("p90b", skey, "/fake/sf")] = [("A", 1.0)]
     cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] = "a model fit"
     cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] = [1, 2, 3]
     try:
@@ -86,9 +87,11 @@ def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
         assert not c.is_cached
         assert cachepool._POOL == {}
         assert ("prep_plan", skey, "/fake/sf") not in cat._FIT_CACHE
+        assert ("p90b", skey, "/fake/sf") not in cat._FIT_CACHE
         assert cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] == "a model fit"
         assert cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] == [1, 2, 3]
     finally:
         cat._FIT_CACHE.pop(("clsgate", skey, "/fake/sf"), None)
         cat._FIT_CACHE.pop(("prep_stream", skey, "/fake/sf"), None)
         cat._FIT_CACHE.pop(("prep_plan", skey, "/fake/sf"), None)
+        cat._FIT_CACHE.pop(("p90b", skey, "/fake/sf"), None)

@@ -219,3 +219,31 @@ def test_fit_partitions_conf_pin_and_floor(spark):
     # never gets more partitions than the cluster has slots
     par = spark.sparkContext.defaultParallelism
     assert fit_partitions(df, floor=1, bytes_per_partition=1) <= par
+
+
+@pytest.mark.parametrize("value", ["abc", "2.5", ""])
+def test_fit_partitions_conf_must_be_integer(spark, value):
+    """A non-integer pin fails with an error naming the conf key."""
+    from mysql_to_s3_spark.operators.classifier import fit_partitions
+
+    key = "mysql_to_s3_spark.classifier.fitPartitions"
+    spark.conf.set(key, value)
+    try:
+        with pytest.raises(ValueError, match=key):
+            fit_partitions(spark.range(3))
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("value", ["0", "-3"])
+def test_fit_partitions_conf_rejects_non_positive(spark, value):
+    """An explicitly set pin <= 0 is refused, not silently ignored."""
+    from mysql_to_s3_spark.operators.classifier import fit_partitions
+
+    key = "mysql_to_s3_spark.classifier.fitPartitions"
+    spark.conf.set(key, value)
+    try:
+        with pytest.raises(ValueError, match=key):
+            fit_partitions(spark.range(3))
+    finally:
+        spark.conf.unset(key)

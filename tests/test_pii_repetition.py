@@ -5,7 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mysql_to_s3_spark.operators.text import pii_counts, redact_pii, repetition_stats
+from mysql_to_s3_spark.operators.text import (
+    lines,
+    pii_counts,
+    redact_pii,
+    repetition_stats,
+    words,
+)
 
 
 def _one(spark, text, cols):
@@ -50,18 +56,22 @@ def test_redaction_order_email_before_phone(spark):
     assert out == "reach me: <PII>"
 
 
+def _rep(col):
+    return repetition_stats(words(col))
+
+
 def test_repetition_stats(spark):
-    r = _one(spark, "spam spam spam spam", repetition_stats)
+    r = _one(spark, "spam spam spam spam", _rep)
     assert r.dup_word_frac == 0.75  # 1 distinct of 4
     assert r.top_bigram_frac == 1.0  # "spam spam" is every bigram
-    r2 = _one(spark, "all words here are unique tokens", repetition_stats)
+    r2 = _one(spark, "all words here are unique tokens", _rep)
     assert r2.dup_word_frac == 0.0
     assert round(r2.top_bigram_frac, 2) == 0.2  # 1 of 5 bigrams
 
 
 def test_repetition_stats_degenerate(spark):
-    assert _one(spark, "", repetition_stats).dup_word_frac == 0.0
-    one = _one(spark, "word", repetition_stats)
+    assert _one(spark, "", _rep).dup_word_frac == 0.0
+    one = _one(spark, "word", _rep)
     assert one.dup_word_frac == 0.0 and one.top_bigram_frac == 0.0
 
 
@@ -72,7 +82,7 @@ def test_gopher_stats_values(spark):
 
     doc = "words only here\n- bullet one\n* bullet two\n1. numbered\nend with...\nhash # and 42 7x"
     df = spark.createDataFrame([(doc,)], "text string")
-    g = gopher_stats(F.col("text"))
+    g = gopher_stats(F.col("text"), words(F.col("text")), lines(F.col("text")))
     row = df.select(*[c.alias(n) for n, c in g.items()]).first()
     # 6 lines: 3 bullets, 1 ellipsis-ended
     assert row["bullet_line_frac"] == pytest.approx(3 / 6)
@@ -84,7 +94,7 @@ def test_gopher_stats_values(spark):
     assert row["alpha_word_frac"] == pytest.approx((n_words - 2) / n_words)
     # empty doc: all zero, no nulls
     z = spark.createDataFrame([("",)], "text string").select(
-        *[c.alias(n) for n, c in gopher_stats(F.col("text")).items()]
+        *[c.alias(n) for n, c in g.items()]
     ).first()
     assert all(z[n] == 0.0 for n in ("symbol_word_ratio", "alpha_word_frac"))
 
@@ -220,11 +230,11 @@ def _py_gopher_repetition(text):
 
 
 def _spark_gopher_repetition(spark, texts):
-    from mysql_to_s3_spark.operators.text import gopher_repetition, words
+    from mysql_to_s3_spark.operators.text import gopher_repetition
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
     df = df.withColumn("__ws__", words(F.col("text")))
-    rep = gopher_repetition(F.col("text"), ws=F.col("__ws__"))
+    rep = gopher_repetition(F.col("text"), F.col("__ws__"))
     rows = (
         df.select("i", *[c.alias(n) for n, c in rep.items()])
         .orderBy("i")
@@ -407,10 +417,10 @@ def test_c4_stats_values(spark):
         ]
     )
     df = spark.createDataFrame([(doc,)], "text string")
-    s = c4_stats(F.col("text"))
+    s = c4_stats(F.col("text"), lines(F.col("text")))
     row = df.select(
         *[v.alias(k) for k, v in s.items()],
-        c4_line_clean(F.col("text")).alias("clean"),
+        c4_line_clean(lines(F.col("text"))).alias("clean"),
     ).first()
     assert row["c4_term_line_frac"] == pytest.approx(5 / 6)
     assert row["c4_short_line_frac"] == pytest.approx(1 / 6)
@@ -426,8 +436,8 @@ def test_c4_stats_values(spark):
     row2 = (
         spark.createDataFrame([("Lorem Ipsum { filler",)], "text string")
         .select(
-            *[v.alias(k) for k, v in c4_stats(F.col("text")).items()],
-            c4_line_clean(F.col("text")).alias("clean"),
+            *[v.alias(k) for k, v in s.items()],
+            c4_line_clean(lines(F.col("text"))).alias("clean"),
         )
         .first()
     )
@@ -509,6 +519,7 @@ def test_c4_stats_random_docs_match_python(spark):
     import re
 
     from mysql_to_s3_spark.operators.text import c4_line_clean, c4_stats
+    from mysql_to_s3_spark.operators.text import lines as text_lines
     from pyspark.sql import functions as F
 
     rng = random.Random(1234)
@@ -529,13 +540,14 @@ def test_c4_stats_random_docs_match_python(spark):
         )
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    s = c4_stats(F.col("text"))
+    ls = text_lines(F.col("text"))
+    s = c4_stats(F.col("text"), ls)
     got = {
         r["doc_id"]: r
         for r in df.select(
             "doc_id", "text",
             *[v.alias(k) for k, v in s.items()],
-            c4_line_clean(F.col("text")).alias("clean"),
+            c4_line_clean(ls).alias("clean"),
         ).collect()
     }
     for i, text in docs:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.decontam import contamination_pairs
 from mysql_to_s3_spark.operators.dedup import minhash_lsh_pairs
-from mysql_to_s3_spark.operators.text import quality_score
+from mysql_to_s3_spark.operators.text import quality_score, words
 from mysql_to_s3_spark.pipeline import (
     CorpusConfig,
     PipelineError,
@@ -68,7 +68,7 @@ def test_full_pipeline_contracts(spark, sf_dir, docs):
     # quality gate: redaction can only change text AFTER the gate, so
     # re-check against the pre-redaction frame
     pre_redact = dict(prep.stages)["decontam"]
-    assert pre_redact.filter(quality_score(F.col("text")) < 0.8).count() == 0
+    assert pre_redact.filter(quality_score(F.col("text"), words(F.col("text"))) < 0.8).count() == 0
 
     # exact dedup: no fingerprint appears twice (redaction is injective
     # enough on this corpus for the check to transfer; use pre-redaction)
@@ -1743,3 +1743,42 @@ def test_lm_bucket_by_language(spark):
     # the global cut buckets by one corpus-wide scale; with disjoint
     # scales the head tercile is dominated by the high-scoring language
     assert "es" not in langs_global or langs_global != {"en", "es"}
+
+
+def test_text_gates_tokenize_once_per_gate(spark):
+    """Each per-row text gate is ONE filter with its word (and line)
+    arrays let-bound inside the predicate, so the optimized plan holds
+    exactly one word regex per gate and the gopher gate splits lines
+    once. (A temp column bound by withColumn before the filter would be
+    inlined back into every reference by predicate pushdown.)"""
+    import re
+
+    from mysql_to_s3_spark import pipeline as P
+    from mysql_to_s3_spark.operators.text import GOPHER_REPETITION_THRESHOLDS
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat.\n- a list")], "doc_id long, text string"
+    )
+    gates = {
+        "quality": (P._apply_quality_gate, CorpusConfig(min_quality=0.5)),
+        "language": (P._apply_language_gate, CorpusConfig(languages=("en",))),
+        "blockwords": (P._apply_blockword_gate, CorpusConfig(block_words=("spam",))),
+        "repetition": (P._apply_repetition_gate, CorpusConfig(
+            max_dup_word_frac=0.5,
+            max_top_bigram_frac=0.5,
+            gopher_repetition_max=dict(GOPHER_REPETITION_THRESHOLDS),
+        )),
+        "gopher_shape": (P._apply_gopher_gate, CorpusConfig(
+            max_symbol_word_ratio=0.1,
+            max_bullet_line_frac=0.9,
+            max_ellipsis_line_frac=0.9,
+            min_alpha_word_frac=0.1,
+        )),
+    }
+    for name, (gate, cfg) in gates.items():
+        out = gate(docs, cfg)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        n_regex = len(re.findall(r"regexp_extract_all\(text#\d+, \\w\+, 0\)", plan))
+        assert n_regex == 1, (name, n_regex, plan)
+        if name == "gopher_shape":
+            assert len(re.findall(r"split\(text#\d+, ", plan)) == 1, plan

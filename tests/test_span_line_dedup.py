@@ -284,87 +284,59 @@ def test_strip_duplicated_spans_keeper_semantics(spark):
     assert got[4]["n_tokens"] == 2
 
 
-def test_token_frame_pooling_matches_unpooled(spark):
-    """r9: the toks= pooling hook — duplicated_span_fraction and
-    strip_duplicated_spans fed a shared token_frame produce EXACTLY the
-    no-pool outputs (mixed case, punctuation, sub-k docs, a 3-holder
-    span family), and a malformed toks frame is refused with a clear
-    error."""
-    from mysql_to_s3_spark.operators.dedup import (
-        strip_duplicated_spans,
-        token_frame,
-    )
-
-    shared = "Alpha beta GAMMA delta, epsilon"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{shared} one two three"),
-            (2, f"zero {shared.lower()} four"),
-            (3, f"pre {shared.upper()} post!"),
-            (4, "unrelated words only here now truly"),
-            (5, "tiny"),
-        ],
-        "doc_id bigint, text string",
-    )
-    toks = token_frame(docs)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(duplicated_span_fraction(docs, k=5, toks=toks)) == rows(
-        duplicated_span_fraction(docs, k=5)
-    )
-    assert rows(strip_duplicated_spans(docs, k=5, toks=toks)) == rows(
-        strip_duplicated_spans(docs, k=5)
-    )
-    bad = docs.select(F.col("doc_id").alias("id"))
-    with pytest.raises(ValueError, match="token_frame"):
-        duplicated_span_fraction(docs, k=5, toks=bad)
-    with pytest.raises(ValueError, match="token_frame"):
-        strip_duplicated_spans(docs, k=5, toks=bad)
+def _py_strip_spans(rows, k, min_docs=2):
+    """Reference rewrite: k-token windows over the RAW token stream,
+    keyed by their lowercased join; every covered token of a non-keeper
+    (min doc id) holder of a span held by >= min_docs docs is removed."""
+    toks = {d: _TOK.findall(text) for d, text in rows}
+    holders = {}  # key -> set(doc)
+    for d, t in toks.items():
+        for i in range(len(t) - k + 1):
+            holders.setdefault("\x1f".join(t[i : i + k]).lower(), set()).add(d)
+    out = {}
+    for d, t in toks.items():
+        covered = set()
+        for i in range(len(t) - k + 1):
+            h = holders["\x1f".join(t[i : i + k]).lower()]
+            if len(h) >= min_docs and d != min(h):
+                covered.update(range(i, i + k))
+        kept = [tok for j, tok in enumerate(t) if j not in covered]
+        out[d] = (" ".join(kept), len(t), len(covered))
+    return out
 
 
-def test_span_windows_pooling_matches_unpooled(spark):
-    """r11: the wins= hook — duplicated_span_fraction and
-    strip_duplicated_spans fed one shared span_windows frame produce
-    EXACTLY the no-pool outputs (mixed case, punctuation, sub-k docs,
-    a 3-holder span family, a fully-covered non-keeper), and a
-    malformed wins frame is refused with a clear error."""
-    from mysql_to_s3_spark.operators.dedup import (
-        duplicated_span_fraction,
-        span_windows,
-        strip_duplicated_spans,
-    )
+def test_span_operators_unicode_case_expansion(spark):
+    """Lowercasing changes the token stream on non-ASCII text: 'İ'
+    lowers to 'i' + U+0307 (one extra punctuation token) and the Kelvin
+    sign U+212A lowers to the ASCII word character 'k'. The measure
+    tokenizes the lowercased text; the rewrite slides its windows over
+    the raw tokens it removes. Each must match its own reference."""
+    from mysql_to_s3_spark.operators.dedup import strip_duplicated_spans
 
-    shared = "Alpha beta GAMMA delta, epsilon"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{shared} one two three"),
-            (2, f"zero {shared.lower()} four"),
-            (3, f"pre {shared.upper()} post!"),
-            (4, "unrelated words only here now truly"),
-            (5, "tiny"),
-            (6, shared),          # keeper candidate of the bare span
-            (7, shared.lower()),  # fully covered non-keeper -> ''
-        ],
-        "doc_id bigint, text string",
-    )
-    wins = span_windows(docs, k=5)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(duplicated_span_fraction(docs, k=5, wins=wins)) == rows(
-        duplicated_span_fraction(docs, k=5)
-    )
-    assert rows(strip_duplicated_spans(docs, k=5, wins=wins)) == rows(
-        strip_duplicated_spans(docs, k=5)
-    )
-    # the fully-covered non-keeper really exercises the empty-rebuild path
-    sp = {r["doc_id"]: r for r in strip_duplicated_spans(docs, k=5, wins=wins).collect()}
-    assert sp[7]["clean_text"] == "" and sp[7]["n_removed"] == sp[7]["n_tokens"] > 0
-    bad = docs.select(F.col("doc_id").alias("id"))
-    with pytest.raises(ValueError, match="span_windows"):
-        duplicated_span_fraction(docs, k=5, wins=bad)
-    with pytest.raises(ValueError, match="span_windows"):
-        strip_duplicated_spans(docs, k=5, wins=bad)
+    kelvin = "\u212a"
+    rows = [
+        (1, "İstanbul is a big city"),
+        (2, "we love İSTANBUL is a big city too"),
+        (3, f"{kelvin}elvin scale rocks"),
+        (4, "kelvin scale rocks here"),
+        (5, f"{kelvin}elvin scale rocks!"),
+        (6, "İstanbul is a big city"),  # fully covered non-keeper -> ''
+        (7, "tiny"),
+    ]
+    df = _docs(spark, rows)
+    got = {
+        r["doc_id"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
+        for r in strip_duplicated_spans(df, k=3).collect()
+    }
+    want = _py_strip_spans(rows, k=3)
+    assert got == want
+    assert want[2] == ("we love too", 9, 6) and want[6][0] == ""
+    got_frac = {
+        r["doc_id"]: (r["n_spans"], r["n_dup_spans"], r["dup_frac"])
+        for r in duplicated_span_fraction(df, k=3).collect()
+    }
+    want_frac = _py_span_fraction(rows, 3, 2)
+    assert got_frac.keys() == want_frac.keys()
+    for d, (n, nd, frac) in want_frac.items():
+        assert got_frac[d][:2] == (n, nd), d
+        assert got_frac[d][2] == (None if frac is None else pytest.approx(frac, abs=1e-9)), d

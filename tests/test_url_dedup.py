@@ -415,7 +415,7 @@ def test_blockword_frac_and_pipeline_gates(spark, tmp_path):
     import pandas as pd
     import pytest
 
-    from mysql_to_s3_spark.operators.text import blockword_frac
+    from mysql_to_s3_spark.operators.text import blockword_frac, words
     from mysql_to_s3_spark.pipeline import (
         CorpusConfig,
         PipelineError,
@@ -435,7 +435,7 @@ def test_blockword_frac_and_pipeline_gates(spark, tmp_path):
     got = {
         r["doc_id"]: r["bf"]
         for r in df.select(
-            "doc_id", F.round(blockword_frac(F.col("text"), ("SPAM",)), 6).alias("bf")
+            "doc_id", F.round(blockword_frac(words(F.col("text")), ("SPAM",)), 6).alias("bf")
         ).collect()
     }
     assert got[1] == 0.0 and abs(got[3] - 0.1) < 1e-9 and got[4] == 0.6
