@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # conf-key fallback for funnel_within(max_events_per_key=...) — the same
-# skew-valve contract as the snowflake child cap (snowflake.py:
-# CHILD_CAP_CONF). None/unset = unbounded (exact over every key).
+# skew valve as the snowflake child cap (SnowflakeConfig.child_cap).
+# None/unset = unbounded (exact over every key).
 FUNNEL_EVENT_CAP_CONF = "mysql_to_s3_spark.funnel.eventCapPerKey"
 
 

@@ -3560,7 +3560,6 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch=25,
                 destination=_os.path.join(root, "out"),
                 last=_os.path.join(root, "checkpoint.json"),
-                key_format="a.b",
                 source_name="orders",
             ),
         )

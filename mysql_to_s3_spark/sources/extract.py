@@ -2,12 +2,15 @@
 JSON batches (reference mysql_to_s3/extract.py:40 Extract).
 
 The reference's thread/queue machinery (extract.py:86-118) dissolves into
-Spark's scheduler: the driver loop only decides BATCH BOUNDARIES (counter
-chain on the strictly-increasing extract field), and each batch is one
-declarative doc_frame -> sink write. Keyset pagination
-(extract.py:156-183) becomes a pushed-down range predicate on the sorted
-extract field; checkpoint/resume keeps the reference's
-[start_point, first_value] contract (extract.py:94-110,254).
+Spark's scheduler: the batch loop only decides BATCH BOUNDARIES, and each
+batch is one declarative doc_frame -> sink write. The reference's keyset
+pagination (extract.py:156-183) becomes batch-key numbering: one listing
+job assigns every fact row at or after ``start`` its counter-chain key
+(``batch_key_columns``: a row_number window over the extract field) and
+collects the distinct keys with each batch's minimum id; a batch's ids
+are that numbered frame filtered on its key, semi-joined into doc_frame.
+Checkpoint/resume keeps the reference's [start_point, first_value]
+contract (extract.py:94-110,254); first_value comes from the listing.
 """
 
 from __future__ import annotations
@@ -25,34 +28,18 @@ from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, doc_f
 from mysql_to_s3_spark.streaming.counters import batch_key_columns
 
 
-class ExtractError(ValueError):
-    pass
-
-
 @dataclass
 class ExtractConfig:
     field: str  # strictly-increasing extract column (id or timestamp)
-    type: str = "number"  # "number" | "time"
     start: Any = 0
     batch: Any = 100  # int, or [duration, size] counter chain
     destination: str = "extract_output"
     last: str | None = None  # checkpoint file path
-    key_format: str = "a.b"  # dot pattern validating batch-key arity
     source_name: str | None = None  # etl lineage source label
 
 
 def key_string(batch_key: tuple) -> str:
     return ".".join(str(int(k)) for k in batch_key)
-
-
-def validate_key_format(key_format: str, batch_key: tuple) -> None:
-    """key_format 'a.b.c' declares the batch-key arity (s3.py:385
-    key_format validation)."""
-    want = len(key_format.split("."))
-    if len(batch_key) != want:
-        raise ExtractError(
-            f"batch key {batch_key} does not match key_format {key_format!r} ({want} parts)"
-        )
 
 
 def read_checkpoint(path: str) -> tuple | None:
@@ -64,9 +51,14 @@ def read_checkpoint(path: str) -> tuple | None:
 
 
 def write_checkpoint(path: str, start_point: tuple, first_value: Any) -> None:
+    """Atomic: a run killed mid-write leaves the previous checkpoint."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
         json.dump({"start_point": list(start_point), "first_value": first_value}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 class Extract:
@@ -87,32 +79,32 @@ class Extract:
         self.snowflake = snowflake
         self.extract = extract
 
-    def batches(self) -> list[tuple]:
-        """Distinct batch keys present in the fact table, in order —
-        computed distributed via the counter-chain column analog."""
-        fact = self.tables[self.plan.table]
-        keyed = batch_key_columns(
-            fact.filter(F.col(self.extract.field) >= F.lit(self.extract.start)),
+    def _keyed(self) -> DataFrame:
+        """Fact rows at or after ``start``, with their batch-key columns."""
+        return batch_key_columns(
+            self.tables[self.plan.table].filter(F.col(self.extract.field) >= F.lit(self.extract.start)),
             self.extract.field,
             self.extract.start,
             self.extract.batch,
             tiebreak_cols=self.plan.id_columns,
         )
+
+    def batches(self) -> list[tuple[tuple, Any]]:
+        """(batch key, minimum id) of every batch present in the fact
+        table, in key order — one distributed job."""
         key_cols = ["__batch0__", "__batch1__"]
-        rows = keyed.select(*key_cols).distinct().orderBy(*key_cols).collect()
-        return [tuple(r) for r in rows]
+        rows = (
+            self._keyed()
+            .groupBy(*key_cols)
+            .agg(F.min(self.plan.id_columns[0]))
+            .orderBy(*key_cols)
+            .collect()
+        )
+        return [((b0, b1), first) for b0, b1, first in rows]
 
     def ids_for_batch(self, batch_key: tuple) -> DataFrame:
-        fact = self.tables[self.plan.table]
-        keyed = batch_key_columns(
-            fact.filter(F.col(self.extract.field) >= F.lit(self.extract.start)),
-            self.extract.field,
-            self.extract.start,
-            self.extract.batch,
-            tiebreak_cols=self.plan.id_columns,
-        )
         cond = (F.col("__batch0__") == batch_key[0]) & (F.col("__batch1__") == batch_key[1])
-        return keyed.filter(cond).select(self.plan.id_columns[0])
+        return self._keyed().filter(cond).select(self.plan.id_columns[0])
 
     def run(
         self,
@@ -129,10 +121,9 @@ class Extract:
                 done_after = cp[0]
 
         written = []
-        for batch_key in self.batches():
+        for batch_key, first in self.batches():
             if done_after is not None and batch_key <= done_after:
                 continue
-            validate_key_format(self.extract.key_format, batch_key)
             key = key_string(batch_key)
             ids_df = self.ids_for_batch(batch_key)
             docs = doc_frame(self.tables, self.plan, self.snowflake, ids_df=ids_df)
@@ -144,7 +135,6 @@ class Extract:
             write_json_lines(docs, path, self.plan.table, etl=etl)
             written.append(path)
             if self.extract.last:
-                first = ids_df.agg(F.min(self.plan.id_columns[0])).collect()[0][0]
                 write_checkpoint(self.extract.last, batch_key, first)
             if notify:
                 from mysql_to_s3_spark.sinks.notify import notify_payload

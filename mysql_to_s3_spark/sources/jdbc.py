@@ -14,8 +14,10 @@ Spark-native mapping:
                                    ORDER BY id LIMIT n" polling
   explicit id batches           -> `predicates` ranges (one partition per
                                    batch), for resuming mid-table
-  information_schema FK scan    -> DISCOVER_RELATIONS_SQL via a 1-row
-                                   JDBC query; feeds snowflake.Relation
+  information_schema scan       -> DISCOVER_COLUMNS_SQL /
+                                   DISCOVER_RELATIONS_SQL via one JDBC
+                                   query each; the rows parse into
+                                   snowflake.TableMeta / snowflake.Relation
 
 No MySQL server exists in this container: the MySQL-specific discovery
 SQL is exercised by unit tests on the generated options/SQL/predicates
@@ -32,7 +34,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mysql_to_s3_spark.sources.snowflake import Relation
+from mysql_to_s3_spark.sources.snowflake import Relation, TableMeta
 
 
 class JdbcError(ValueError):
@@ -138,8 +140,8 @@ def read_table(
     return spark.read.format("jdbc").options(**opts).load()
 
 
-# FK scan (snowflake_schema.py:70-108): one information_schema query, the
-# result feeds snowflake.Relation verbatim.
+# FK and column scans (snowflake_schema.py:70-108): one information_schema
+# query each, parsed by relations_from_rows / tables_from_rows.
 DISCOVER_RELATIONS_SQL = """\
 SELECT constraint_name,
        table_name,
@@ -183,6 +185,18 @@ def relations_from_rows(rows: list[tuple]) -> list[Relation]:
             rel.columns.append(column)
             rel.referenced_columns.append(ref_column)
     return list(by_constraint.values())
+
+
+def tables_from_rows(rows: list[tuple]) -> list[TableMeta]:
+    """(table, column, ordinal, column_key) rows -> TableMeta list: columns
+    in ordinal order, the PRI-keyed ones as id columns."""
+    tables: dict[str, TableMeta] = {}
+    for table, column, _pos, column_key in sorted(rows, key=lambda r: (r[0], r[2])):
+        t = tables.setdefault(table, TableMeta(table, [], []))
+        t.columns.append(column)
+        if column_key == "PRI":
+            t.id_columns.append(column)
+    return list(tables.values())
 
 
 def discover_relations(spark: SparkSession, cfg: JdbcConfig) -> list[Relation]:

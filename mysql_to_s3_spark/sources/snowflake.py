@@ -5,7 +5,9 @@ snowflake_schema.py).
 Pipeline:
 
   1. metadata: table/column/relation records — from ``information_schema``
-     over JDBC (``scan_jdbc``) or given directly (tests / any catalog).
+     over JDBC (``jdbc.tables_from_rows`` / ``jdbc.relations_from_rows``
+     parse the discovery queries' rows) or given directly (tests / any
+     catalog).
   2. ``build_plan``: the reference's ``follow_paths`` BFS
      (snowflake_schema.py:288-513) re-expressed as pure driver-side
      planning: many-to-one relations become inner-object DimNodes,
@@ -24,8 +26,7 @@ Pipeline:
 Scale notes: dimension tables broadcast (they are small by definition of
 the snowflake shape); the child aggregation shuffles on the parent key
 once per nesting level. Skew from a fact row with millions of children is
-bounded by the CHILD CAP (``SnowflakeConfig.child_cap`` or the
-``mysql_to_s3_spark.snowflake.childCap`` conf): a per-parent
+bounded by the CHILD CAP (``SnowflakeConfig.child_cap``): a per-parent
 ``row_number() <= cap`` BEFORE the collect_list bounds the aggregation
 buffer, and the dropped-row count lands in a sibling
 ``<field>__overflow__`` column — see ``_prepare_child``. Unset = the
@@ -35,9 +36,11 @@ reference's unbounded contract.
 from __future__ import annotations
 
 import itertools
+import operator
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,34 +67,26 @@ class TableMeta:
     id_columns: list[str]
 
 
-# conf-key fallback for SnowflakeConfig.child_cap (None/unset = unbounded)
-CHILD_CAP_CONF = "mysql_to_s3_spark.snowflake.childCap"
-# conf-key fallback for SnowflakeConfig.child_salt (None/unset/<=1 = off)
-CHILD_SALT_CONF = "mysql_to_s3_spark.snowflake.childSalt"
-
-
 @dataclass
 class SnowflakeConfig:
     fact_table: str
     show_foreign_keys: bool = True
     reference_only: list[str] = dc_field(default_factory=list)
     exclude: list[str] = dc_field(default_factory=list)
-    include: list[str] = dc_field(default_factory=list)
     null_values: list[str] = dc_field(default_factory=list)
     add_relations: list[str] = dc_field(default_factory=list)  # "t.col -> r.col"
     # max children collected per parent per nesting level (the 100 TB skew
     # valve, SURVEY §7): a parent with more children keeps the FIRST cap in
     # sort_columns order and gains a sibling `<field>__overflow__` count of
-    # the dropped rows. None = read CHILD_CAP_CONF; both unset = unbounded
-    # (the reference contract, snowflake_schema.py:535-543).
+    # the dropped rows. None = unbounded (the reference contract,
+    # snowflake_schema.py:535-543).
     child_cap: int | None = None
     # salted two-phase child collect (SURVEY §7 "cap + salt"): with
     # n > 1, children are first collected per (fk, salt in 0..n-1) — n
     # parallel tasks per hot parent — then the n pre-sorted sub-arrays
     # merge in a second, tiny (n rows per parent) aggregation. Below the
     # cap this preserves every child byte-for-byte vs the unsalted path;
-    # the cap stays the final valve. None = read CHILD_SALT_CONF;
-    # both unset/<=1 = the single-phase collect.
+    # the cap stays the final valve. None/<=1 = the single-phase collect.
     child_salt: int | None = None
 
 
@@ -131,53 +126,18 @@ class FactPlan:
     children: list[ChildNode] = dc_field(default_factory=list)
 
 
-# ---------------------------------------------------------------------------
-# metadata acquisition
-
-
-def scan_jdbc(spark: SparkSession, url: str, properties: dict, database: str) -> tuple[list[TableMeta], list[Relation]]:
-    """FK-graph discovery from information_schema over JDBC
-    (reference snowflake_schema.py:70-211 _scan_database)."""
-
-    def q(sql: str) -> DataFrame:
-        return spark.read.jdbc(url, f"({sql}) t", properties=properties)
-
-    kcu = q(
-        f"""SELECT constraint_name, table_name, column_name, ordinal_position,
-                   referenced_table_name, referenced_column_name
-            FROM information_schema.key_column_usage
-            WHERE table_schema = '{database}' AND referenced_table_name IS NOT NULL"""
-    ).collect()
-    cols = q(
-        f"""SELECT table_name, column_name, ordinal_position, column_key
-            FROM information_schema.columns WHERE table_schema = '{database}'"""
-    ).collect()
-
-    tables: dict[str, TableMeta] = {}
-    for r in sorted(cols, key=lambda r: (r["table_name"], r["ordinal_position"])):
-        t = tables.setdefault(r["table_name"], TableMeta(r["table_name"], [], []))
-        t.columns.append(r["column_name"])
-        if r["column_key"] == "PRI":
-            t.id_columns.append(r["column_name"])
-
-    rels: dict[str, Relation] = {}
-    for r in sorted(kcu, key=lambda r: (r["constraint_name"], r["ordinal_position"])):
-        key = f"{r['table_name']}.{r['constraint_name']}"
-        rel = rels.setdefault(
-            key, Relation(key, r["table_name"], [], r["referenced_table_name"], [])
-        )
-        rel.columns.append(r["column_name"])
-        rel.referenced_columns.append(r["referenced_column_name"])
-    return list(tables.values()), list(rels.values())
-
-
-def parse_add_relations(specs: list[str]) -> list[Relation]:
-    """User-declared relations: "child.fk -> parent.key"."""
+def parse_add_relations(specs: list[str], tables: dict[str, TableMeta]) -> list[Relation]:
+    """User-declared relations: "child.fk -> parent.key", each end a known
+    table and column."""
     out = []
-    for i, s in enumerate(specs):
-        lhs, rhs = [x.strip() for x in s.split("->")]
-        t, c = lhs.rsplit(".", 1)
-        rt, rc = rhs.rsplit(".", 1)
+    for i, spec in enumerate(specs):
+        ends = [end.strip().rsplit(".", 1) for end in spec.split("->")]
+        if len(ends) != 2 or any(len(end) != 2 for end in ends):
+            raise SnowflakeError(f"add_relations {spec!r}: expected 'table.column -> table.column'")
+        for t, c in ends:
+            if t not in tables or c not in tables[t].columns:
+                raise SnowflakeError(f"add_relations {spec!r}: unknown column {t}.{c}")
+        (t, c), (rt, rc) = ends
         out.append(Relation(f"__added_{i}__", t, [c], rt, [rc]))
     return out
 
@@ -244,7 +204,7 @@ def build_plan(
     tmap = {t.name: t for t in tables}
     if cfg.fact_table not in tmap:
         raise SnowflakeError(f"unknown fact table {cfg.fact_table!r}")
-    relations = list(relations) + parse_add_relations(cfg.add_relations)
+    relations = list(relations) + parse_add_relations(cfg.add_relations, tmap)
     cls = _Classifier(tmap, relations, cfg)
     exclude = set(cfg.exclude)
 
@@ -368,26 +328,14 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     """-> (frame keyed by renamed ref columns, key names, value column name).
 
     The value column is the dim's struct (or its inline scalar)."""
-    df = tables[d.table]
-    fields: list[tuple[str, any]] = [(out, F.col(c)) for c, out in d.out_columns]
-    for sub in d.dims:
-        sub_df, sub_keys, sub_v = _prepare_dim(tables, sub)
-        cond = None
-        for fk, k in zip(sub.fk_columns, sub_keys):
-            c = df[fk] == sub_df[k]
-            cond = c if cond is None else cond & c
-        df = df.join(F.broadcast(sub_df), cond, "left").drop(*sub_keys)
-        fields.append((sub.field, F.col(sub_v)))
+    df, fields = _element_fields(tables, d)
     if d.inline_column is not None:
         value = F.col(d.inline_column)
     else:
         # all-missing struct -> NULL so scrub can drop the empty object
         struct = F.struct(*[c.alias(n) for n, c in fields])
-        any_set = None
-        for _, c in fields:
-            e = c.isNotNull()
-            any_set = e if any_set is None else any_set | e
-        value = F.when(any_set if any_set is not None else F.lit(False), struct)
+        set_flags = [c.isNotNull() for _, c in fields]
+        value = F.when(reduce(operator.or_, set_flags) if set_flags else F.lit(False), struct)
     uid = next(_uid)
     keys = [f"__k{uid}_{i}__" for i in range(len(d.ref_columns))]
     vname = f"__v{uid}__"
@@ -398,49 +346,26 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     )
 
 
-def _resolved_child_cap(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
-    if cfg is not None and cfg.child_cap is not None:
-        return int(cfg.child_cap)
-    try:
-        raw = df.sparkSession.conf.get(CHILD_CAP_CONF, None)
-    except Exception:
-        raw = None
-    return int(raw) if raw is not None else None
-
-
-def _resolved_child_salt(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
-    if cfg is not None and cfg.child_salt is not None:
-        n = int(cfg.child_salt)
-    else:
-        try:
-            raw = df.sparkSession.conf.get(CHILD_SALT_CONF, None)
-        except Exception:
-            raw = None
-        n = int(raw) if raw is not None else 0
-    return n if n > 1 else None
+def _left_join(df: DataFrame, sub_df: DataFrame, columns: list[str], keys: list[str]) -> DataFrame:
+    """``df`` left-joined to ``sub_df`` on columns == keys; the keys dropped."""
+    cond = reduce(operator.and_, [df[c] == sub_df[k] for c, k in zip(columns, keys)])
+    return df.join(sub_df, cond, "left").drop(*keys)
 
 
 def _element_fields(
     tables: dict[str, DataFrame], node, cfg: SnowflakeConfig | None = None
-) -> tuple[DataFrame, list[tuple[str, any]]]:
-    """Shared dim/child field assembly for one table's rows."""
+) -> tuple[DataFrame, list[tuple[str, Column]]]:
+    """One table's rows joined to its dims (and children), with the
+    (output name, column) fields of its struct."""
     df = tables[node.table]
-    fields: list[tuple[str, any]] = [(out, F.col(c)) for c, out in node.out_columns]
+    fields = [(out, F.col(c)) for c, out in node.out_columns]
     for sub in node.dims:
         sub_df, sub_keys, sub_v = _prepare_dim(tables, sub)
-        cond = None
-        for fk, k in zip(sub.fk_columns, sub_keys):
-            c = df[fk] == sub_df[k]
-            cond = c if cond is None else cond & c
-        df = df.join(F.broadcast(sub_df), cond, "left").drop(*sub_keys)
+        df = _left_join(df, F.broadcast(sub_df), sub.fk_columns, sub_keys)
         fields.append((sub.field, F.col(sub_v)))
-    for sub in getattr(node, "children", []) or []:
+    for sub in getattr(node, "children", []):
         sub_df, sub_keys, sub_v, sub_ov = _prepare_child(tables, sub, cfg)
-        cond = None
-        for pc, k in zip(sub.parent_columns, sub_keys):
-            c = df[pc] == sub_df[k]
-            cond = c if cond is None else cond & c
-        df = df.join(sub_df, cond, "left").drop(*sub_keys)
+        df = _left_join(df, sub_df, sub.parent_columns, sub_keys)
         fields.append((sub.field, F.col(sub_v)))
         if sub_ov is not None:
             # dropped-children count per parent (NULL for parents with no
@@ -450,7 +375,7 @@ def _element_fields(
 
 
 def _prepare_child(
-    tables: dict[str, DataFrame], ch: ChildNode, cfg: SnowflakeConfig | None = None
+    tables: dict[str, DataFrame], ch: ChildNode, cfg: SnowflakeConfig
 ) -> tuple[DataFrame, list[str], str, str | None]:
     """-> (frame keyed by renamed FK columns, key names, array column name,
     overflow column name | None).
@@ -458,7 +383,7 @@ def _prepare_child(
     Children are ordered by their id columns via sort_array over a
     (sort-key, payload) struct (snowflake_schema.py:535-543 ordering).
 
-    Skew valve (SURVEY §7): with a child cap configured, a per-parent
+    Skew valve (SURVEY §7): with ``child_cap`` set, a per-parent
     row_number() ≤ cap runs BEFORE the collect_list, so the aggregation
     buffer holds at most cap elements — AQE skew-join splitting cannot
     split a single group's collect_list, and an uncapped million-child
@@ -470,25 +395,24 @@ def _prepare_child(
     overflow column (reference contract extension; the reference itself
     is unbounded, snowflake_schema.py:535-543).
 
-    Salt valve (SURVEY §7 "cap + salt"; r8): the cap alone is LOSSY on a
-    hot parent — everything past it truncates — and below the cap all of
-    a hot parent's children still funnel through one task's window sort
-    + one aggregation buffer. With ``child_salt = n`` (or
-    CHILD_SALT_CONF) > 1, the collect runs in TWO phases: phase 1 groups
-    by (fk, xxhash64(sort_columns) % n) — a hot parent's children spread
-    over n tasks, each producing one pre-sorted sub-array (and, capped,
-    each keeping only its own top-cap: the global top-cap is a subset of
-    the per-salt top-caps, so nothing the final slice needs is dropped) —
-    and phase 2 re-groups by fk alone over n ROWS per parent, merging
-    with flatten + one array sort (+ slice(cap) and the summed overflow
-    count when capped). Same results as the single-phase path
-    element-for-element when sort keys are unique (ties: both paths pick
-    arbitrarily, like any engine's LIMIT under ties); the extra phase-2
-    shuffle moves n_parents × n rows of pre-serialized arrays, not
-    child rows."""
+    Salt valve (SURVEY §7 "cap + salt"): the cap alone is LOSSY on a hot
+    parent — everything past it truncates — and below the cap all of a
+    hot parent's children still funnel through one task's window sort +
+    one aggregation buffer. With ``child_salt = n`` > 1 the collect runs
+    in TWO phases: phase 1 groups by (fk, xxhash64(sort_columns) % n) — a
+    hot parent's children spread over n tasks, each producing one
+    pre-sorted sub-array (and, capped, each keeping only its own top-cap:
+    the global top-cap is a subset of the per-salt top-caps, so nothing
+    the final slice needs is dropped) — and phase 2 re-groups by fk alone
+    over n ROWS per parent, merging with flatten + one array sort and
+    summing the per-salt child counts. Same results as the single-phase
+    path element-for-element when sort keys are unique (ties: both paths
+    pick arbitrarily, like any engine's LIMIT under ties); the extra
+    phase-2 shuffle moves n_parents × n rows of pre-serialized arrays,
+    not child rows."""
     df, fields = _element_fields(tables, ch, cfg)
-    cap = _resolved_child_cap(df, cfg)
-    n_salts = _resolved_child_salt(df, cfg)
+    cap = cfg.child_cap
+    salted = cfg.child_salt is not None and cfg.child_salt > 1
     elem = F.struct(*[c.alias(n) for n, c in fields])
     sort_struct = F.struct(
         *[F.col(s).alias(f"__s{i}__") for i, s in enumerate(ch.sort_columns)],
@@ -496,113 +420,43 @@ def _prepare_child(
     )
     uid = next(_uid)
     keys = [f"__k{uid}_{i}__" for i in range(len(ch.fk_columns))]
-    vname = f"__v{uid}__"
-    if n_salts is not None:
-        return _prepare_child_salted(
-            df, ch, cap, n_salts, sort_struct, keys, vname, uid
+    vname, oname = f"__v{uid}__", f"__ov{uid}__"
+    group = [F.col(c).alias(k) for c, k in zip(ch.fk_columns, keys)]
+    per_group = list(ch.fk_columns)
+    if salted:
+        sname = f"__salt{uid}__"
+        df = df.withColumn(
+            sname, F.pmod(F.xxhash64(*[F.col(s) for s in ch.sort_columns]), F.lit(cfg.child_salt))
         )
-    if cap is None:
-        grouped = (
-            df.groupBy(*[F.col(c).alias(k) for c, k in zip(ch.fk_columns, keys)])
-            .agg(F.sort_array(F.collect_list(sort_struct)).alias("__raw__"))
-            .select(*keys, F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname))
-        )
-        return grouped, keys, vname, None
-    from pyspark.sql import Window
-
-    oname = f"__ov{uid}__"
-    w_order = Window.partitionBy(*ch.fk_columns).orderBy(
-        *[F.col(s) for s in ch.sort_columns]
-    )
-    w_all = Window.partitionBy(*ch.fk_columns)
-    capped = (
-        df.withColumn("__rn__", F.row_number().over(w_order))
-        .withColumn("__nc__", F.count(F.lit(1)).over(w_all))
-        .filter(F.col("__rn__") <= F.lit(cap))
-    )
-    grouped = (
-        capped.groupBy(*[F.col(c).alias(k) for c, k in zip(ch.fk_columns, keys)])
-        .agg(
-            F.sort_array(F.collect_list(sort_struct)).alias("__raw__"),
-            F.greatest(F.max("__nc__") - F.lit(cap), F.lit(0)).cast("long").alias(oname),
-        )
-        .select(
-            *keys,
-            F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname),
-            oname,
-        )
-    )
-    return grouped, keys, vname, oname
-
-
-def _prepare_child_salted(
-    df: DataFrame,
-    ch: ChildNode,
-    cap: int | None,
-    n_salts: int,
-    sort_struct,
-    keys: list[str],
-    vname: str,
-    uid: int,
-) -> tuple[DataFrame, list[str], str, str | None]:
-    """Two-phase (salted) child collect — see ``_prepare_child``. Phase 1
-    parallelizes a hot parent over ``n_salts`` tasks; phase 2 merges the
-    pre-sorted sub-arrays (n_salts rows per parent)."""
-    sname = f"__salt{uid}__"
-    salted = df.withColumn(
-        sname,
-        F.pmod(F.xxhash64(*[F.col(s) for s in ch.sort_columns]), F.lit(n_salts)),
-    )
-    key_aliases = [F.col(c).alias(k) for c, k in zip(ch.fk_columns, keys)]
-    if cap is None:
-        partial = salted.groupBy(*key_aliases, F.col(sname)).agg(
-            F.sort_array(F.collect_list(sort_struct)).alias("__sub__")
-        )
-        grouped = (
-            partial.groupBy(*keys)
-            .agg(F.sort_array(F.flatten(F.collect_list("__sub__"))).alias("__raw__"))
-            .select(
-                *keys,
-                F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname),
+        group.append(F.col(sname))
+        per_group.append(sname)
+    aggs = [F.sort_array(F.collect_list(sort_struct)).alias("__raw__")]
+    if cap is not None:
+        # per-(fk[, salt]) top-cap plus the group's full child count
+        df = (
+            df.withColumn(
+                "__rn__",
+                F.row_number().over(Window.partitionBy(*per_group).orderBy(*ch.sort_columns)),
             )
+            .withColumn("__nc__", F.count(F.lit(1)).over(Window.partitionBy(*per_group)))
+            .filter(F.col("__rn__") <= F.lit(cap))
         )
-        return grouped, keys, vname, None
-    from pyspark.sql import Window
+        aggs.append(F.max("__nc__").alias("__nc__"))
+    grouped = df.groupBy(*group).agg(*aggs)
+    if salted:
+        merge = [F.sort_array(F.flatten(F.collect_list("__raw__"))).alias("__raw__")]
+        if cap is not None:
+            merge.append(F.sum("__nc__").alias("__nc__"))
+        grouped = grouped.groupBy(*keys).agg(*merge)
+    if cap is None:
+        return grouped.select(*keys, F.transform("__raw__", _payload).alias(vname)), keys, vname, None
+    kept = F.transform(F.slice("__raw__", 1, cap), _payload)
+    overflow = F.greatest(F.col("__nc__") - F.lit(cap), F.lit(0)).cast("long")
+    return grouped.select(*keys, kept.alias(vname), overflow.alias(oname)), keys, vname, oname
 
-    oname = f"__ov{uid}__"
-    # per-(fk, salt) top-cap: the merged top-cap can only contain rows
-    # that are top-cap within their own salt group, so pre-capping here
-    # bounds every phase-1 buffer at cap without losing final elements
-    w_order = Window.partitionBy(*ch.fk_columns, sname).orderBy(
-        *[F.col(s) for s in ch.sort_columns]
-    )
-    w_all = Window.partitionBy(*ch.fk_columns, sname)
-    capped = (
-        salted.withColumn("__rn__", F.row_number().over(w_order))
-        .withColumn("__nc__", F.count(F.lit(1)).over(w_all))
-        .filter(F.col("__rn__") <= F.lit(cap))
-    )
-    partial = capped.groupBy(*key_aliases, F.col(sname)).agg(
-        F.sort_array(F.collect_list(sort_struct)).alias("__sub__"),
-        F.max("__nc__").alias("__cnt__"),
-    )
-    grouped = (
-        partial.groupBy(*keys)
-        .agg(
-            F.sort_array(F.flatten(F.collect_list("__sub__"))).alias("__m__"),
-            F.sum("__cnt__").alias("__tot__"),
-        )
-        .select(
-            *keys,
-            F.transform(F.slice(F.col("__m__"), 1, cap), lambda s: s["__p__"]).alias(
-                vname
-            ),
-            F.greatest(F.col("__tot__") - F.lit(cap), F.lit(0))
-            .cast("long")
-            .alias(oname),
-        )
-    )
-    return grouped, keys, vname, oname
+
+def _payload(sort_struct: Column) -> Column:
+    return sort_struct["__p__"]
 
 
 def doc_frame(

@@ -3,10 +3,12 @@ reference (/root/reference/tests/test_extract.py:46-148 configs,
 :184-356 expected docs). Six cases: simple, complex, inline, lean,
 lean_inline, lean_inline_all — byte-equivalent nested JSON after scrub."""
 
+import re
+
 import pytest
 
 from mysql_to_s3_spark.sinks.json_sink import collect_docs
-from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, build_plan, doc_frame
+from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, TableMeta, build_plan, doc_frame
 from tests.fixtures_snowflake import RELATIONS, TABLES_META, build_tables
 
 
@@ -241,29 +243,13 @@ def test_child_cap_golden_100k_under_1k_cap(spark):
     assert rows[3]["n_items"] is None and rows[3]["overflow"] is None
 
 
-def test_child_cap_via_conf_and_unset_schema(spark):
-    """The conf key gates the cap when the config leaves it None; with
-    both unset the schema has NO overflow column (reference contract)."""
-    from mysql_to_s3_spark.sources.snowflake import CHILD_CAP_CONF
-
+def test_child_cap_unset_schema_has_no_overflow(spark):
+    """With child_cap unset the schema has NO overflow column (reference
+    contract)."""
     tables, meta, rels = _cap_fixture(spark)
     cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
-    plan = build_plan(meta, rels, cfg)
-
-    uncapped = doc_frame(tables, plan, cfg)
+    uncapped = doc_frame(tables, build_plan(meta, rels, cfg), cfg)
     assert "child__overflow__" not in uncapped.schema["parent"].dataType.fieldNames()
-
-    spark.conf.set(CHILD_CAP_CONF, "10")
-    try:
-        capped = doc_frame(tables, plan, cfg)
-        assert "child__overflow__" in capped.schema["parent"].dataType.fieldNames()
-        from pyspark.sql import functions as F
-
-        r = {x["__id__"]: x for x in capped.select("__id__", F.size("parent.child").alias("n"), F.col("parent.child__overflow__").alias("ov")).collect()}
-        assert r[1]["n"] == 10 and r[1]["ov"] == 99_990
-        assert r[2]["n"] == 5 and r[2]["ov"] == 0
-    finally:
-        spark.conf.unset(CHILD_CAP_CONF)
 
 
 def test_child_salt_two_phase_matches_unsalted(spark):
@@ -283,33 +269,42 @@ def test_child_salt_two_phase_matches_unsalted(spark):
         plain = doc_frame(
             tables, build_plan(meta, rels, plain_cfg), plain_cfg
         ).orderBy("__id__").collect()
-        salted = doc_frame(
-            tables, build_plan(meta, rels, salted_cfg), salted_cfg
-        ).orderBy("__id__").collect()
+        salted_df = doc_frame(tables, build_plan(meta, rels, salted_cfg), salted_cfg)
+        assert "__salt" in salted_df._jdf.queryExecution().optimizedPlan().toString()
+        salted = salted_df.orderBy("__id__").collect()
         assert salted == plain, f"cap={cap}: salted path diverged"
 
 
-def test_child_salt_via_conf(spark):
-    """CHILD_SALT_CONF gates the two-phase collect when the config leaves
-    child_salt None; the salt column shows in the optimized plan and the
-    assembled docs are unchanged."""
-    from pyspark.sql import functions as F
+# -- add_relations validation --
 
-    from mysql_to_s3_spark.sources.snowflake import CHILD_SALT_CONF
+_ORDERS_META = [
+    TableMeta("orders", ["o_orderkey", "o_custkey"], ["o_orderkey"]),
+    TableMeta("customer", ["c_custkey", "c_name"], ["c_custkey"]),
+]
 
-    tables, meta, rels = _cap_fixture(spark)
-    cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
-    plan = build_plan(meta, rels, cfg)
-    spark.conf.set(CHILD_SALT_CONF, "4")
-    try:
-        docs = doc_frame(tables, plan, cfg)
-        assert "__salt" in docs._jdf.queryExecution().optimizedPlan().toString()
-        r = {
-            x["__id__"]: x
-            for x in docs.select(
-                "__id__", F.size("parent.child").alias("n")
-            ).collect()
-        }
-        assert r[1]["n"] == 100_000 and r[2]["n"] == 5
-    finally:
-        spark.conf.unset(CHILD_SALT_CONF)
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        "orders.o_custkey",
+        "a -> b",
+        "a.b -> c.d -> e.f",
+        "orders.o_custkey -> custmr.c_custkey",
+        "ordrs.o_custkey -> customer.c_custkey",
+        "orders.o_custky -> customer.c_custkey",
+    ],
+)
+def test_add_relations_bad_spec_raises(spec):
+    """A malformed spec, an unknown table or an unknown column fails at
+    plan-build time with a SnowflakeError naming the spec."""
+    from mysql_to_s3_spark.sources.snowflake import SnowflakeError
+
+    cfg = SnowflakeConfig(fact_table="orders", add_relations=[spec])
+    with pytest.raises(SnowflakeError, match=re.escape(repr(spec))):
+        build_plan(_ORDERS_META, [], cfg)
+
+
+def test_add_relations_valid_spec_adds_dim():
+    cfg = SnowflakeConfig(fact_table="orders", add_relations=[" orders.o_custkey -> customer.c_custkey "])
+    (dim,) = build_plan(_ORDERS_META, [], cfg).dims
+    assert (dim.table, dim.fk_columns, dim.ref_columns) == ("customer", ["o_custkey"], ["c_custkey"])

@@ -75,7 +75,7 @@ def test_extract_notifies_per_batch(spark, sf_dir, tmp_path):
         {"orders": orders},
         plan,
         SnowflakeConfig(fact_table="orders"),
-        ExtractConfig(field="o_orderkey", batch=20, destination=str(tmp_path / "out"), key_format="a.b"),
+        ExtractConfig(field="o_orderkey", batch=20, destination=str(tmp_path / "out")),
     )
     q = FileQueue(str(tmp_path / "q.jsonl"))
     written = ex.run(notify=q)

@@ -114,6 +114,50 @@ _RECORDED_KEY_COLUMN_USAGE = [
 ]
 
 
+# information_schema.columns rows as MySQL returns them for the same
+# schema (ORDER BY table_name, ordinal_position): PRI on the primary key,
+# MUL on the indexed FK columns.
+_RECORDED_COLUMNS = [
+    ("fact_table", "id", 1, "PRI"),
+    ("fact_table", "name", 2, ""),
+    ("fact_table", "about", 3, "MUL"),
+    ("inner1", "id", 1, "PRI"),
+    ("inner1", "value", 2, ""),
+    ("inner1", "time", 3, "MUL"),
+    ("inner2", "id", 1, "PRI"),
+    ("inner2", "value", 2, ""),
+    ("nested1", "id", 1, "PRI"),
+    ("nested1", "ref", 2, "MUL"),
+    ("nested1", "description", 3, ""),
+    ("nested1", "about", 4, "MUL"),
+    ("nested2", "id", 1, "PRI"),
+    ("nested2", "ref", 2, "MUL"),
+    ("nested2", "minutia", 3, ""),
+    ("nested2", "about", 4, "MUL"),
+]
+
+
+def test_tables_from_recorded_rows_match_reference_schema():
+    """tables_from_rows over the recorded column rows reproduces the
+    hand-written fixture tables; PRI columns become id columns in ordinal
+    order whatever order the rows arrive in."""
+    from mysql_to_s3_spark.sources.jdbc import tables_from_rows
+    from mysql_to_s3_spark.sources.snowflake import TableMeta
+    from tests.fixtures_snowflake import TABLES_META
+
+    by_name = lambda tables: {t.name: t for t in tables}
+    assert by_name(tables_from_rows(_RECORDED_COLUMNS)) == by_name(TABLES_META)
+
+    composite = [
+        ("lineitem", "l_quantity", 3, ""),
+        ("lineitem", "l_linenumber", 2, "PRI"),
+        ("lineitem", "l_orderkey", 1, "PRI"),
+    ]
+    assert tables_from_rows(composite) == [
+        TableMeta("lineitem", ["l_orderkey", "l_linenumber", "l_quantity"], ["l_orderkey", "l_linenumber"])
+    ]
+
+
 def test_discovery_recorded_rows_match_reference_schema():
     """relations_from_rows over the recorded wire rows reproduces the
     hand-written fixture relations (name aside) edge-for-edge."""
@@ -138,11 +182,11 @@ def test_discovery_composite_fk_merges_by_constraint():
 
 
 def test_discovery_drives_snowflake_end_to_end(spark):
-    """The discovered relations drive build_plan/doc_frame to the SAME
-    documents as the hand-written fixture relations — the full MySQL
-    discovery path minus only the socket."""
+    """The discovered tables and relations drive build_plan/doc_frame to
+    the SAME documents as the hand-written fixture metadata — the full
+    MySQL discovery path minus only the socket."""
     from mysql_to_s3_spark.sinks.json_sink import collect_docs
-    from mysql_to_s3_spark.sources.jdbc import relations_from_rows
+    from mysql_to_s3_spark.sources.jdbc import relations_from_rows, tables_from_rows
     from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, build_plan, doc_frame
     from tests.fixtures_snowflake import RELATIONS, TABLES_META, build_tables
 
@@ -152,7 +196,9 @@ def test_discovery_drives_snowflake_end_to_end(spark):
         null_values=["-", "unknown", ""],
         reference_only=["inner1", "inner2"],
     )
-    discovered = build_plan(TABLES_META, relations_from_rows(_RECORDED_KEY_COLUMN_USAGE), cfg)
+    discovered = build_plan(
+        tables_from_rows(_RECORDED_COLUMNS), relations_from_rows(_RECORDED_KEY_COLUMN_USAGE), cfg
+    )
     handwritten = build_plan(TABLES_META, RELATIONS, cfg)
     ids = [10, 11, 12, 13, 15]
     got = collect_docs(doc_frame(tables, discovered, cfg, ids=ids), "fact_table")

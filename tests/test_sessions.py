@@ -319,7 +319,7 @@ def test_funnel_within_cap_no_truncation_matches_uncapped(spark, sf_dir):
 
 def test_funnel_within_cap_via_conf(spark):
     """FUNNEL_EVENT_CAP_CONF gates the valve exactly like the explicit
-    parameter (the snowflake CHILD_CAP_CONF contract)."""
+    parameter."""
     import datetime as dt
 
     from pyspark.sql import functions as F
